@@ -158,24 +158,27 @@ def _page_pool(spec: PagesSpec, seed: int, n: int, kind: str, processes: int) ->
     }[kind]
     sub_seed = seed * 4 + ("png", "gray_jpeg", "color_jpeg").index(kind)
     surplus = n // 10 + 2 if spec.noisy else 0
-    c = generate_corpus(
-        CorpusSpec(n_docs=n + surplus, seed=sub_seed, max_pages=1, p_text_span=0.0, **noisy, **jpeg),
-        processes=processes,
-    )
-    regions = c["golden_regions"]
-    short_ruby = regions["has_ruby"] & (regions["glyph_text"].str.replace(" ", "").str.len() <= 2)
-    skip = set(regions.loc[short_ruby, "media_ref"])
-    texts: dict[str, list[str]] = {}
-    for r in c["golden_spans"].sort_values(["doc_id", "order"]).itertuples(index=False):
-        texts.setdefault(r.media_ref, []).append(r.text)
-    pages = [
-        {**m, "texts": texts.get(m["media_ref"], [])}
-        for m in c["media"].to_dict("records")
-        if m["media_ref"] not in skip
-    ]
-    if len(pages) < n:
-        raise RuntimeError(f"only {len(pages)} of {n} {kind} pages are usable for seed {seed}")
-    return pages[:n]
+    while True:
+        c = generate_corpus(
+            CorpusSpec(n_docs=n + surplus, seed=sub_seed, max_pages=1, p_text_span=0.0, **noisy, **jpeg),
+            processes=processes,
+        )
+        regions = c["golden_regions"]
+        short_ruby = regions["has_ruby"] & (regions["glyph_text"].str.replace(" ", "").str.len() <= 2)
+        skip = set(regions.loc[short_ruby, "media_ref"])
+        texts: dict[str, list[str]] = {}
+        for r in c["golden_spans"].sort_values(["doc_id", "order"]).itertuples(index=False):
+            texts.setdefault(r.media_ref, []).append(r.text)
+        pages = [
+            {**m, "texts": texts.get(m["media_ref"], [])}
+            for m in c["media"].to_dict("records")
+            if m["media_ref"] not in skip
+        ]
+        if len(pages) >= n:
+            return pages[:n]
+        # More pages left out than the surplus covers (about one seed in
+        # twenty): render a larger batch from the same seed.
+        surplus = 2 * surplus + 2
 
 
 def _build_pages(spec: PagesSpec, seed: int, processes: int) -> tuple[dict, dict]:

@@ -45,13 +45,7 @@ class SparkRunner:
             "spark.ui.port": "0",
             "spark.local.dir": os.path.join(self.work, "spark-local"),
             "spark.sql.warehouse.dir": os.path.join(self.work, "warehouse"),
-            # The whole heap is committed and touched at launch: otherwise
-            # its growth follows GC timing and peak RSS swings by 2x from
-            # run to run. Heap pressure shows in spark.gc_s instead.
-            "spark.driver.extraJavaOptions": (
-                f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
-                f" -Xms{os.environ['SPARK_DRIVER_MEM']} -XX:+AlwaysPreTouch"
-            ),
+            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
         }
         self.spark = get_spark(app_name="perfbench", cores=self.cores, extra_conf=conf)
         self.spark.sparkContext.setLogLevel("ERROR")
@@ -67,6 +61,9 @@ class SparkRunner:
         self.start(ui)
         self.warm_up()
         return time.perf_counter() - t0
+
+    def full_gc(self) -> None:
+        self.spark.sparkContext._jvm.java.lang.System.gc()
 
     def stop_session(self) -> None:
         if self.spark is not None:
@@ -123,9 +120,7 @@ def repeat_for(seconds: float, rep) -> list[float]:
     return walls
 
 
-# --- peak resident memory over the process tree (psutil-free, /proc only) --
-
-_PAGE = os.sysconf("SC_PAGE_SIZE")
+# --- peak memory: JVM heap after GC + non-heap (MXBeans), worker PSS (/proc) --
 
 
 def _children_map() -> dict[int, list[int]]:
@@ -144,46 +139,45 @@ def _children_map() -> dict[int, list[int]]:
     return kids
 
 
-def _resident(pid: int, is_jvm: bool) -> int:
-    """PSS, so pages the forked Python workers share count once; for the
-    JVM, which forks nothing, the cheap RSS (reading its PSS takes ~20 ms)."""
-    if is_jvm:
-        with open(f"/proc/{pid}/statm") as f:
-            return int(f.read().split()[1]) * _PAGE
-    with open(f"/proc/{pid}/smaps_rollup") as f:
-        return next(int(ln.split()[1]) for ln in f if ln.startswith("Pss:")) * 1024
-
-
-def tree_resident(root: int) -> dict[str, int]:
-    """Resident bytes by command name, summed over every descendant of
-    ``root`` (not root itself: the benchmark process holds the corpus).
-    A child of the JVM that still runs the java binary is being spawned
-    and shares the JVM's memory until it execs: it is skipped, or the
-    JVM would count twice."""
+def worker_pss(root: int) -> dict[str, int]:
+    """PSS bytes by command name, summed over every process below ``root``
+    (not root itself: the benchmark process holds the corpus) that is not
+    a JVM. PSS counts the pages that forked Python workers share once.
+    JVMs are skipped, as is a JVM child that has not exec'd yet, since it
+    still runs the java binary; their children are still walked."""
     kids = _children_map()
     out: dict[str, int] = {}
-    stack = [(pid, "") for pid in kids.get(root, [])]
+    stack = list(kids.get(root, []))
     while stack:
-        pid, parent_exe = stack.pop()
+        pid = stack.pop()
         try:
-            exe = os.readlink(f"/proc/{pid}/exe")
-            is_jvm = os.path.basename(exe) == "java"
-            if is_jvm and exe == parent_exe:
-                continue
-            with open(f"/proc/{pid}/comm") as f:
-                comm = f.read().strip()
-            out[comm] = out.get(comm, 0) + _resident(pid, is_jvm)
+            if os.path.basename(os.readlink(f"/proc/{pid}/exe")) != "java":
+                with open(f"/proc/{pid}/comm") as f:
+                    comm = f.read().strip()
+                with open(f"/proc/{pid}/smaps_rollup") as f:
+                    pss = next(int(ln.split()[1]) for ln in f if ln.startswith("Pss:")) * 1024
+                out[comm] = out.get(comm, 0) + pss
         except (OSError, StopIteration):  # the process ended meanwhile
             continue
-        stack.extend((kid, exe) for kid in kids.get(pid, []))
+        stack.extend(kids.get(pid, []))
     return out
 
 
-class PeakRss:
-    """Samples tree_resident(root) on a thread while the block runs and
-    keeps the largest total, with its split by command name."""
+class PeakMemory:
+    """Samples, on a thread while the block runs, the memory the program
+    holds and keeps the largest total with its split:
 
-    def __init__(self, root: int | None = None, interval: float = 0.1):
+    - ``jvm_heap``: driver heap in use after the latest GC, from the JVM's
+      GC MXBeans over py4j. Heap in use between GCs, like the JVM's RSS,
+      mostly shows how far the GC has let garbage grow.
+    - ``jvm_non_heap``: metaspace, code cache and the like (MemoryMXBean).
+    - worker_pss(root), by command name: the Python workers.
+    """
+
+    def __init__(self, spark=None, root: int | None = None, interval: float = 0.05):
+        mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory if spark else None
+        self.mx = mf.getMemoryMXBean() if mf else None
+        self.gcs = list(mf.getGarbageCollectorMXBeans()) if mf else []
         self.root = root or os.getpid()
         self.interval = interval
         self.peak = 0
@@ -191,17 +185,25 @@ class PeakRss:
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
 
+    def _jvm(self) -> dict[str, int]:
+        infos = [i for i in (g.getLastGcInfo() for g in self.gcs) if i is not None]
+        last = max(infos, key=lambda i: i.getEndTime(), default=None)
+        heap = sum(u.getUsed() for u in last.getMemoryUsageAfterGc().values()) if last else 0
+        return {"jvm_heap": heap, "jvm_non_heap": self.mx.getNonHeapMemoryUsage().getUsed()}
+
     def _sample(self) -> None:
-        by_comm = tree_resident(self.root)
-        if sum(by_comm.values()) > self.peak:
-            self.peak, self.at_peak = sum(by_comm.values()), by_comm
+        parts = worker_pss(self.root)
+        if self.mx is not None:
+            parts.update(self._jvm())
+        if sum(parts.values()) > self.peak:
+            self.peak, self.at_peak = sum(parts.values()), parts
 
     def _run(self) -> None:
         while not self._stop.is_set():
             self._sample()
             self._stop.wait(self.interval)
 
-    def __enter__(self) -> PeakRss:
+    def __enter__(self) -> PeakMemory:
         self._thread.start()
         return self
 

@@ -7,9 +7,9 @@ from __future__ import annotations
 
 # name -> (unit, better, meaning)
 END_TO_END = {
-    "setup_s": ("s", "lower", "median of 3 session starts + worker-spawning warm-up job (first one launches the JVM)"),
+    "setup_s": ("s", "lower", "cold start: JVM launch, session start and a worker-spawning warm-up job"),
     "docs_per_s": ("docs/s", "higher", "documents / median job wall time (pages_resume: the resumed call)"),
-    "peak_rss_mb": ("MB", "lower", "peak summed resident memory (JVM RSS + Python worker PSS) during the timed jobs"),
+    "peak_rss_mb": ("MB", "lower", "median over timed jobs (each after a full GC) of peak JVM heap after GC + non-heap + worker PSS"),
 }
 
 # Printed by the run's detail line and aggregated by suite.py where they apply.

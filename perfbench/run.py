@@ -5,14 +5,15 @@
 
 One closed-loop client on ``local[--cores]`` (default: every core this
 process may use). The corpus is generated from ``--seed`` (cached under
-``.perfbench_cache/``) before Spark starts. Then the session is set up
-three times (``setup_s`` is the median), the workload's output is
-checked against the corpus expectation, and jobs run back to back for
-``--seconds``. ``--trace 0`` reports the end-to-end metrics; ``--trace 1``
-reports the per-layer metrics instead (see metrics.py) and writes a span
-trace to ``.perfbench_cache/traces/``. The last stdout line is one JSON
-object: ``{"correct", "attempted", "failed", "metrics"}``. Exit code 1 on
-any output mismatch, 2 when the program under test is missing.
+``.perfbench_cache/``) before Spark starts. Then the JVM and the session
+start and a warm-up job spawns the Python workers (``setup_s``), the
+workload's output is checked against the corpus expectation, and jobs
+run back to back for ``--seconds``. ``--trace 0`` reports the end-to-end
+metrics; ``--trace 1`` reports the per-layer metrics instead (see
+metrics.py) and writes a span trace to ``.perfbench_cache/traces/``. The
+last stdout line is one JSON object: ``{"correct", "attempted", "failed",
+"metrics"}``. Exit code 1 on any output mismatch, 2 when the program
+under test is missing.
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ sys.path.insert(0, str(REPO))
 from perfbench import metrics  # noqa: E402
 from perfbench.corpus import load_or_build  # noqa: E402
 from perfbench.harness import (  # noqa: E402
-    PeakRss,
+    PeakMemory,
     SparkRunner,
     Tracer,
     repeat_for,
@@ -41,29 +42,34 @@ from perfbench.harness import (  # noqa: E402
 )
 from perfbench.workloads import WORKLOADS  # noqa: E402
 
-N_SETUPS = 3
-
-
 def untraced(wl, runner: SparkRunner, bind, seconds: float) -> dict:
-    setups = []
-    for i in range(N_SETUPS):
-        if i:
-            runner.stop_session()
-        setups.append(runner.timed_setup())
+    setup_s = runner.timed_setup()
     bind(runner.spark)
     t0 = time.perf_counter()
     wl.check()  # warm-up run whose output is checked
     check_s = time.perf_counter() - t0
     wl.warm_up()
-    with PeakRss() as rss:
-        walls = repeat_for(seconds, wl.rep)
+    peaks: list[PeakMemory] = []
+
+    def rep(i: int) -> float:
+        # Every job starts from a full GC, as a job in a fresh JVM would:
+        # its heap figures do not depend on garbage left by earlier jobs.
+        runner.full_gc()
+        with PeakMemory(runner.spark) as mem:
+            wall = wl.rep(i)
+        peaks.append(mem)
+        return wall
+
+    walls = repeat_for(seconds, rep)
+    mem = sorted(peaks, key=lambda m: m.peak)[(len(peaks) - 1) // 2]  # the median job's
     values = {
-        "setup_s": statistics.median(setups),
+        "setup_s": setup_s,
         "docs_per_s": wl.meta["docs"] / statistics.median(walls),
-        "peak_rss_mb": rss.peak / 2**20,
+        "peak_rss_mb": mem.peak / 2**20,
     }
-    return {"metrics": metrics.report(values, metrics.END_TO_END), "walls": walls, "setups": setups, "check_s": check_s,
-            "peak_mb_by_process": {k: round(v / 2**20) for k, v in rss.at_peak.items()}, **wl.detail(walls)}
+    return {"metrics": metrics.report(values, metrics.END_TO_END), "walls": walls, "check_s": check_s,
+            "peak_mb": [round(m.peak / 2**20) for m in peaks],
+            "peak_mb_by_part": {k: round(v / 2**20) for k, v in mem.at_peak.items()}, **wl.detail(walls)}
 
 
 def traced(wl, runner: SparkRunner, bind, seconds: float, trace_path: str) -> dict:
@@ -105,7 +111,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--cores", type=int, default=len(os.sched_getaffinity(0)))
     ap.add_argument("--size", choices=("full", "tiny"), default="full")
-    ap.add_argument("--corrupt-expectation", action="store_true", help="self-test: must fail")
     args = ap.parse_args(argv)
 
     if not (REPO / "mangaextractor_spark" / "__init__.py").is_file():
@@ -124,7 +129,7 @@ def main(argv: list[str] | None = None) -> int:
     print(f"workload={wl.name} seed={args.seed} cores={args.cores} corpus={json.dumps(meta)}", flush=True)
 
     def bind(spark):
-        wl.bind(spark, corpus, meta, run_dir, args.corrupt_expectation)
+        wl.bind(spark, corpus, meta, run_dir)
 
     runner = SparkRunner(args.cores, run_dir)
     try:

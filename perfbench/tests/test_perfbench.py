@@ -15,6 +15,7 @@ import time
 from pathlib import Path
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 
 HERE = Path(__file__).resolve().parent
@@ -22,7 +23,8 @@ ROOT = HERE.parent.parent
 sys.path.insert(0, str(ROOT))
 
 from perfbench import metrics  # noqa: E402
-from perfbench.harness import PeakRss  # noqa: E402
+from perfbench.corpus import load_or_build  # noqa: E402
+from perfbench.harness import PeakMemory  # noqa: E402
 from perfbench.workloads import WORKLOADS, bad_docs  # noqa: E402
 
 
@@ -56,16 +58,16 @@ def test_bad_docs_flags_changed_missing_and_duplicated_spans():
     assert bad_docs(pd.concat([exp, exp.iloc[[2]]]), exp) == {"b"}
 
 
-def test_peak_rss_sees_child_processes():
+def test_peak_memory_sees_child_processes():
     hog = "import time; b = bytearray(64 << 20); b[::4096] = b'x' * len(b[::4096]); time.sleep(3)"
     child = subprocess.Popen([sys.executable, "-c", hog])
     try:
-        with PeakRss(interval=0.02) as rss:
+        with PeakMemory(interval=0.02) as mem:
             time.sleep(1.5)
     finally:
         child.kill()
         child.wait()
-    assert rss.peak >= 48 << 20
+    assert mem.peak >= 48 << 20
 
 
 @pytest.mark.parametrize("workload", ["interleaved_html", "pages_resume"])
@@ -92,7 +94,17 @@ def test_tiny_traced_run_prints_every_per_layer_metric():
 
 
 def test_corrupted_expectation_fails_the_run():
-    code, lines = run("--workload", "interleaved_html", "--size", "tiny", "--corrupt-expectation")
+    seed = 990001  # reserved for this test: its cached corpus is altered
+    corpus, _ = load_or_build(WORKLOADS["interleaved_html"]("tiny").spec, seed, str(ROOT / ".perfbench_cache"))
+    try:
+        part = next((Path(corpus) / "expected").glob("*.parquet"))
+        expected = pq.read_table(part)
+        rows = expected.to_pylist()
+        rows[0]["text"] += "#"
+        pq.write_table(expected.from_pylist(rows, schema=expected.schema), part)
+        code, lines = run("--workload", "interleaved_html", "--size", "tiny", "--seed", str(seed))
+    finally:
+        shutil.rmtree(corpus)
     result = json.loads(lines[-1])
     assert code == 1
     assert not result["correct"] and result["failed"] >= 1
