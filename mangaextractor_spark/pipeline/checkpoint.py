@@ -1,68 +1,173 @@
-"""Chunked execution with per-partition lineage + resume.
+"""Chunked execution with per-chunk lineage and resume, shared by both
+resumable pipelines: the OCR flagship (``run_extraction``) and the
+interleaved main-content flagship (``run_main_content``, the
+text-flagship transform of queries/main_content.py).
 
 The reference's resume marker is moving a processed directory to
 `concluido/` and skipping it on the next run (reference
 core/processor.py:252-254,331-338, S7) plus page-identity upsert keys
-(db_util.py:59). The engine equivalent: the expensive kernel stage is
-executed in content-addressed CHUNKS (chunk = hash-bucket of
-media_ref); each completed chunk commits (a) its OCR output to a
-chunk-partitioned table and (b) a lineage row with doc ranges, span
-counts and bubble stats. A killed run resumes by anti-joining
-completed chunk ids — partition-granular resumability per north_rule.
+(db_util.py:59). The engine equivalent: the expensive stage runs in
+content-addressed CHUNKS (a hash bucket of media_ref or doc_id). ONE
+pass stages the input partitioned by chunk, so every chunk iteration
+is a pruned directory read and a resumed run never rescans the source.
+Each chunk then commits (a) its output into a chunk-partitioned table
+by idempotent overwrite and (b) one lineage row. A killed run resumes
+by skipping the chunks that have a lineage row, so a chunk that died
+mid-write is simply redone.
 
-On a cluster both tables are Iceberg (`writeTo(...).append()` with
-snapshot isolation); the sandbox uses parquet directories with the
-same layout. Chunk writes are idempotent (overwrite-by-chunk), so a
-chunk that failed mid-write is simply redone.
+A lineage row's figures cost no extra Spark job: the staged-input
+figures (pages, docs, doc range, input spans) come from one upfront
+groupBy over the chunks still to run, and the output sums are observed
+(``DataFrame.observe``) on the committing write. The driver writes the
+row with pyarrow. Manifest and lineage are written with pathlib, so
+``out_dir`` is a driver-local path.
+
+On a cluster the tables are Iceberg (REPLACE PARTITION + snapshot
+append), and a source bucket-partitioned by doc_id IS the staging
+(``run_main_content(input_is_chunked=True)``); the sandbox uses parquet
+directories with the same layout.
 """
 
 from __future__ import annotations
 
+import functools
 import json
+import os
 import time
 import uuid
+from collections.abc import Callable, Iterable
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .extract import number_spans, ocr_pages
+from .extract import _well_split, number_spans, ocr_pages
 
-LINEAGE_SCHEMA = (
-    "run_id string, chunk int, status string, n_pages long, n_docs long, "
-    "n_bubbles long, n_empty long, n_failed_pages long, "
-    "doc_id_min string, doc_id_max string, wall_ms long"
-)
+_OCR_COUNTS = ("n_pages", "n_docs", "n_bubbles", "n_empty", "n_failed_pages")
+_MC_COUNTS = ("n_docs", "n_spans", "n_text", "n_image", "n_dropped")
 
 
 class ChunkFailure(RuntimeError):
     pass
 
 
-def _lineage_dir(out_dir: str) -> str:
-    return f"{out_dir}/_lineage"
-
-
-def completed_chunks(spark: SparkSession, out_dir: str) -> set[int]:
-    return _completed(spark, out_dir, "done")
-
-
-def covers_completed(spark: SparkSession, out_dir: str) -> bool:
-    return bool(_completed(spark, out_dir, "covers_done"))
-
-
-def _completed(spark: SparkSession, out_dir: str, status: str) -> set[int]:
-    path = Path(_lineage_dir(out_dir))
-    if not any(path.glob("*.parquet")) and not any(path.glob("**/*.parquet")):
-        return set()
-    rows = (
-        spark.read.parquet(str(path))
-        .filter(F.col("status") == status)
-        .select("chunk")
-        .distinct()
-        .collect()
+def _lineage_schema(counts: tuple[str, ...]) -> pa.Schema:
+    """The names and types Spark gave lineage rows before the driver
+    wrote them, so old and new files read as one table."""
+    return pa.schema(
+        [("run_id", pa.string()), ("chunk", pa.int32()), ("status", pa.string())]
+        + [(c, pa.int64()) for c in counts]
+        + [("doc_id_min", pa.string()), ("doc_id_max", pa.string()), ("wall_ms", pa.int64())]
     )
-    return {r.chunk for r in rows}
+
+
+def _replace(path: Path, write: Callable[[str], object]) -> None:
+    """Write ``path`` under a dot-prefixed temporary name, then rename it
+    into place: a kill mid-write leaves only a hidden file, which no
+    later run (nor a parquet reader) picks up."""
+    tmp = path.with_name(f".{path.name}.tmp")
+    write(str(tmp))
+    os.replace(tmp, path)
+
+
+def _count(cond: Column) -> Column:
+    return F.sum(F.when(cond, 1).otherwise(0))
+
+
+def completed_chunks(out_dir: str, status: str) -> set[int]:
+    """The chunk ids that have a ``status`` lineage row under ``out_dir``."""
+    path = Path(out_dir) / "_lineage"
+    if not any(path.glob("*.parquet")):
+        return set()
+    rows = pq.read_table(path, columns=["chunk", "status"]).to_pydict()
+    return {c for c, s in zip(rows["chunk"], rows["status"]) if s == status}
+
+
+def _stage(out_dir: str, manifest: str, settings: dict, write: Callable[[], None] | None) -> None:
+    """Materialize the staged input once with ``write``; the manifest,
+    written LAST, is the staging commit marker, so a run killed
+    mid-staging re-materializes. The chunk domain is baked into the
+    staged layout (resuming with a smaller n_chunks would silently never
+    process the chunks above it), so a resume under other settings fails
+    fast instead of trusting the out_dir-is-per-run-config convention."""
+    path = Path(out_dir) / manifest
+    if path.exists():
+        stored = json.loads(path.read_text())
+        for key, value in settings.items():
+            if stored.get(key, False) != value:
+                raise ChunkFailure(
+                    f"staging at {out_dir} was materialized with {key}="
+                    f"{stored.get(key, False)}, but this run requested {key}={value}; "
+                    f"rerun with {key}={stored.get(key, False)} or a fresh out_dir."
+                )
+        return
+    if write is not None:
+        write()
+    path.parent.mkdir(parents=True, exist_ok=True)
+    _replace(path, lambda tmp: Path(tmp).write_text(json.dumps(settings)))
+
+
+def _write_chunked(df: DataFrame, key: str, n_chunks: int, path: str) -> None:
+    chunk = F.pmod(F.xxhash64(key), F.lit(n_chunks)).cast("int")
+    df.withColumn("chunk", chunk).write.partitionBy("chunk").mode("overwrite").parquet(path)
+
+
+def _run_chunks(
+    out_dir: str,
+    status: str,
+    chunks: Iterable[int],
+    chunk_output: Callable[[int], DataFrame],
+    chunk_dir: Callable[[int], str],
+    counts: tuple[str, ...],
+    observed: list[Column],
+    run_id: str,
+    fail_on_chunk: int | None,
+    staged: DataFrame | None = None,
+    staged_figures: tuple[Column, ...] = (),
+) -> None:
+    """Commit every chunk without a ``status`` lineage row: overwrite
+    ``chunk_dir(c)`` with ``chunk_output(c)``, then write the lineage row.
+
+    A lineage count is the chunk's ``staged_figures`` value plus its
+    ``observed`` value of the same name (either may be absent);
+    ``doc_id_min``/``doc_id_max`` come from whichever supplies them.
+    ``fail_on_chunk`` injects a failure before that chunk commits."""
+    done = completed_chunks(out_dir, status)
+    todo = [c for c in chunks if c not in done]
+    figures: dict[int, dict] = {}
+    if todo and staged_figures:
+        figures = {
+            r["chunk"]: r.asDict()
+            for r in staged.filter(F.col("chunk").isin(todo))
+            .groupBy("chunk")
+            .agg(*staged_figures)
+            .collect()
+        }
+    schema = _lineage_schema(counts)
+    lineage = Path(out_dir) / "_lineage"
+    for chunk in todo:
+        if fail_on_chunk == chunk:
+            raise ChunkFailure(f"injected failure before {status} chunk {chunk} committed")
+        t0 = time.monotonic()
+        obs = Observation()
+        chunk_output(chunk).observe(obs, *observed).write.mode("overwrite").parquet(
+            chunk_dir(chunk)
+        )
+        staged_row, out_row = figures.get(chunk, {}), obs.get
+        row = {"run_id": run_id, "chunk": chunk, "status": status}
+        row.update({c: (staged_row.get(c) or 0) + (out_row.get(c) or 0) for c in counts})
+        for c in ("doc_id_min", "doc_id_max"):
+            row[c] = staged_row.get(c) or out_row.get(c) or ""
+        row["wall_ms"] = int((time.monotonic() - t0) * 1000)
+        table = pa.Table.from_pylist([row], schema=schema)
+        lineage.mkdir(parents=True, exist_ok=True)
+        _replace(lineage / f"{status}.{chunk}.{run_id}.parquet", lambda t: pq.write_table(table, t))
+
+
+def _doc_range() -> tuple[Column, Column]:
+    return F.min("doc_id").alias("doc_id_min"), F.max("doc_id").alias("doc_id_max")
 
 
 def run_extraction(
@@ -81,6 +186,12 @@ def run_extraction(
     """Execute the pipeline chunk-by-chunk with lineage; returns the
     final numbered span DataFrame (also written to ``{out_dir}/spans``).
 
+    Chunks are hash buckets of media_ref; each commits its OCR rows to
+    ``{out_dir}/ocr/chunk=N`` under a ``done`` lineage row counting the
+    chunk's staged pages and docs (``n_pages``, ``n_docs``, doc range,
+    a page with no regions included) and its observed bubbles, empty
+    OCR calls and failed pages.
+
     ``fail_on_chunk`` injects a failure before that chunk commits —
     used by the resume tests (kill mid-run, rerun, verify completed
     chunks are skipped and output equals a clean run). ``-1`` injects
@@ -95,13 +206,13 @@ def run_extraction(
 
     Cover-failure contract (NO RETRY): a cover whose bytes fail to
     decode is committed as a NULL-byte marker row and counted in the
-    ``covers_done`` lineage row's ``n_failed`` — a later resume does
-    NOT retry it, exactly as a failed page inside a committed OCR chunk
-    is not retried. This is deliberate: staged cover bytes are
+    ``covers_done`` lineage row's ``n_failed_pages`` — a later resume
+    does NOT retry it, exactly as a failed page inside a committed OCR
+    chunk is not retried. This is deliberate: staged cover bytes are
     immutable (re-decoding the same bytes fails the same way), so an
     automatic retry loop could never terminate on a genuinely corrupt
     cover. Transient-failure recovery is explicit instead: check
-    ``n_failed`` in the lineage table and rerun with a fresh
+    ``n_failed_pages`` in the lineage table and rerun with a fresh
     ``out_dir`` (or delete the ``covers_done`` row + ``covers/`` dir)
     to force reprocessing.
     """
@@ -109,150 +220,152 @@ def run_extraction(
     spans = docs.select("doc_id", F.explode("spans").alias("sp")).select(
         "doc_id", "sp.kind", "sp.text", "sp.media_ref", "sp.offset"
     )
-    # SINGLE-PASS materialization: the docs-media join runs ONCE, writing
-    # the page table physically partitioned by chunk; every per-chunk
-    # iteration below then reads only its own partition directory
-    # (partition pruning), instead of re-scanning the media table and
-    # re-executing the join once per chunk (n_chunks x the input IO).
-    # The _SUCCESS marker makes the materialization itself resumable: a
-    # run killed mid-chunk-loop reuses the committed page table, so a
-    # resumed run performs ZERO media scans. (Iceberg: this is the
-    # bucket-partitioned staging table; out_dir is per run-config, so
-    # the staging content is never stale for its lineage.)
-    pages_dir = f"{out_dir}/_pages"
-    capa_dir = f"{out_dir}/_capa"
-    manifest_path = Path(out_dir) / "_staging_manifest.json"
-    if manifest_path.exists():
-        # Staging-reuse guard (resume correctness): the chunk domain of
-        # the staged page table is baked in at materialization time —
-        # resuming with a smaller n_chunks would silently never process
-        # pages whose stored chunk >= n_chunks. Fail fast instead of
-        # trusting the out_dir-is-per-run-config convention.
-        stored = json.loads(manifest_path.read_text())
-        if stored["n_chunks"] != n_chunks:
-            raise ChunkFailure(
-                f"staging at {pages_dir} was materialized with n_chunks="
-                f"{stored['n_chunks']}, but this run requested n_chunks="
-                f"{n_chunks}; resuming would drop or re-bucket pages. "
-                f"Rerun with n_chunks={stored['n_chunks']} or a fresh out_dir."
-            )
-        if include_covers and not stored.get("covers", False):
-            raise ChunkFailure(
-                f"staging at {out_dir} was materialized without cover "
-                "candidates; rerun with a fresh out_dir to include covers."
-            )
-    else:
+    pages_dir, capa_dir = f"{out_dir}/_pages", f"{out_dir}/_capa"
+
+    def stage() -> None:
         if include_covers:
             from ..functions.covers import cover_candidates
 
             cover_candidates(media).select("media_ref", "image_bytes").write.mode(
                 "overwrite"
             ).parquet(capa_dir)
-        (
+        image_pages = (
             spans.filter(F.col("kind") == "image")
             .select("doc_id", "offset", "media_ref")
             .join(media.select("media_ref", "image_bytes"), "media_ref")
-            .withColumn("chunk", F.pmod(F.xxhash64("media_ref"), F.lit(n_chunks)).cast("int"))
-            .write.partitionBy("chunk")
-            .mode("overwrite")
-            .parquet(pages_dir)
         )
-        # The manifest is the staging commit marker: written LAST, so a
-        # run killed mid-staging re-materializes everything above.
-        manifest_path.write_text(json.dumps({"n_chunks": n_chunks, "covers": include_covers}))
+        _write_chunked(image_pages, "media_ref", n_chunks, pages_dir)
+
+    _stage(out_dir, "_staging_manifest.json", {"n_chunks": n_chunks, "covers": include_covers}, stage)
     pages = spark.read.parquet(pages_dir)
-    done = completed_chunks(spark, out_dir)
-    for chunk in range(n_chunks):
-        if chunk in done:
-            continue
-        if fail_on_chunk == chunk:
-            raise ChunkFailure(f"injected failure before chunk {chunk} committed")
-        t0 = time.monotonic()
+
+    def chunk_ocr(chunk: int) -> DataFrame:
         chunk_pages = pages.filter(F.col("chunk") == chunk).drop("chunk")
-        # Same auto-selection as extract_spans: the pruned chunk scan is
-        # page-granular (needs no byte shuffle) when it has enough
-        # splits; under-split chunks take the salted repartition.
-        well_split = (
-            chunk_pages.rdd.getNumPartitions()
-            >= spark.sparkContext.defaultParallelism
-        )
-        ocr = ocr_pages(
+        return ocr_pages(
             chunk_pages,
             engine=engine,
             furigana=furigana,
             robust=robust,
-            num_partitions=0 if well_split else None,
+            num_partitions=0 if _well_split(chunk_pages) else None,
         )
-        # Idempotent commit: overwrite this chunk's directory, then append
-        # the lineage row. (Iceberg: REPLACE PARTITION + snapshot append.)
-        ocr.write.mode("overwrite").parquet(f"{out_dir}/ocr/chunk={chunk}")
-        written = spark.read.parquet(f"{out_dir}/ocr/chunk={chunk}")
-        stats = written.agg(
+
+    is_bubble = F.col("bubble_rank") >= 0
+    _run_chunks(
+        out_dir,
+        "done",
+        range(n_chunks),
+        chunk_ocr,
+        lambda c: f"{out_dir}/ocr/chunk={c}",
+        _OCR_COUNTS,
+        [
+            _count(is_bubble).alias("n_bubbles"),
+            _count(is_bubble & (F.col("text") == "")).alias("n_empty"),
+            _count(~is_bubble).alias("n_failed_pages"),
+        ],
+        run_id,
+        fail_on_chunk,
+        staged=pages,
+        staged_figures=(
             F.countDistinct("media_ref").alias("n_pages"),
             F.countDistinct("doc_id").alias("n_docs"),
-            F.sum(F.when(F.col("bubble_rank") >= 0, 1).otherwise(0)).alias("n_bubbles"),
-            F.sum(
-                F.when((F.col("text") == "") & (F.col("bubble_rank") >= 0), 1).otherwise(0)
-            ).alias("n_empty"),
-            F.sum(F.when(F.col("bubble_rank") < 0, 1).otherwise(0)).alias("n_failed"),
-            F.min("doc_id").alias("doc_id_min"),
-            F.max("doc_id").alias("doc_id_max"),
-        ).first()
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        spark.createDataFrame(
-            [
-                (
-                    run_id,
-                    chunk,
-                    "done",
-                    stats.n_pages,
-                    stats.n_docs,
-                    stats.n_bubbles or 0,  # SUM over an empty chunk is NULL
-                    stats.n_empty or 0,
-                    stats.n_failed or 0,
-                    stats.doc_id_min,
-                    stats.doc_id_max,
-                    wall_ms,
-                )
-            ],
-            LINEAGE_SCHEMA,
-        ).write.mode("append").parquet(_lineage_dir(out_dir))
-    if include_covers and not covers_completed(spark, out_dir):
-        if fail_on_chunk == -1:
-            raise ChunkFailure("injected failure before covers committed")
+            *_doc_range(),
+        ),
+    )
+    if include_covers:
         from ..functions.covers import covers
 
-        t0 = time.monotonic()
         capa = spark.read.parquet(capa_dir)
-        cov = covers(capa)
-        cov.write.mode("overwrite").parquet(f"{out_dir}/covers")
-        written = spark.read.parquet(f"{out_dir}/covers")
-        cstats = written.agg(
-            F.count(F.lit(1)).alias("n_covers"),
-            F.countDistinct("doc_id").alias("n_docs"),
-            F.sum(F.when(F.col("cover_bytes").isNull(), 1).otherwise(0)).alias("n_failed"),
-            F.min("doc_id").alias("doc_id_min"),
-            F.max("doc_id").alias("doc_id_max"),
-        ).first()
-        spark.createDataFrame(
+        n_covers = F.count(F.lit(1))  # covers() keeps one row per doc_id
+        _run_chunks(
+            out_dir,
+            "covers_done",
+            [-1],
+            lambda _: covers(capa),
+            lambda _: f"{out_dir}/covers",
+            _OCR_COUNTS,
             [
-                (
-                    run_id,
-                    -1,
-                    "covers_done",
-                    cstats.n_covers,
-                    cstats.n_docs,
-                    0,
-                    0,
-                    cstats.n_failed or 0,
-                    cstats.doc_id_min or "",
-                    cstats.doc_id_max or "",
-                    int((time.monotonic() - t0) * 1000),
-                )
+                n_covers.alias("n_pages"),
+                n_covers.alias("n_docs"),
+                _count(F.col("cover_bytes").isNull()).alias("n_failed_pages"),
+                *_doc_range(),
             ],
-            LINEAGE_SCHEMA,
-        ).write.mode("append").parquet(_lineage_dir(out_dir))
-    ocr_all = spark.read.parquet(f"{out_dir}/ocr")
-    final = number_spans(spans, ocr_all.drop("chunk"))
+            run_id,
+            fail_on_chunk,
+        )
+    final = number_spans(spans, spark.read.parquet(f"{out_dir}/ocr").drop("chunk"))
     final.write.mode("overwrite").parquet(f"{out_dir}/spans")
+    return spark.read.parquet(f"{out_dir}/spans")
+
+
+def run_main_content(
+    spark: SparkSession,
+    docs: DataFrame,
+    out_dir: str,
+    n_chunks: int = 8,
+    fail_on_chunk: int | None = None,
+    run_id: str | None = None,
+    input_is_chunked: bool = False,
+) -> DataFrame:
+    """Execute main-content extraction chunk-by-chunk with lineage;
+    returns the final span DataFrame (also at ``{out_dir}/spans``).
+
+    ``docs`` is the north_rule interleaved table
+    (doc_id string, spans array<struct<kind,text,media_ref,offset>>).
+    The transform is map-side (array ops + one explode, zero
+    exchanges), so the unit of commit is a hash chunk of doc_id: each
+    chunk writes its spans to ``{out_dir}/spans/chunk=N`` under an
+    ``mc_done`` lineage row (staged docs and doc range, observed span
+    counts by kind, dropped = staged spans - committed spans).
+    ``fail_on_chunk`` injects a failure before that chunk commits (for
+    the kill/resume tests).
+
+    ``input_is_chunked=True`` declares that ``docs`` already carries an
+    int ``chunk`` column in ``[0, n_chunks)`` backed by a pruned layout
+    (an Iceberg table bucket-partitioned on doc_id, or a parquet
+    directory partitioned by chunk) — the staging rewrite is SKIPPED
+    entirely, which is the production shape: the table layout IS the
+    staging, and per-chunk filters prune to their own partitions.
+    """
+    from ..queries.main_content import main_content_spans_df
+
+    if input_is_chunked and "chunk" not in docs.columns:
+        raise ChunkFailure("input_is_chunked=True but `docs` has no chunk column")
+    run_id = run_id or uuid.uuid4().hex[:12]
+    staged_dir = f"{out_dir}/_staged"
+    _stage(
+        out_dir,
+        "_mc_manifest.json",
+        {"n_chunks": n_chunks, "input_is_chunked": input_is_chunked},
+        None if input_is_chunked else lambda: _write_chunked(docs, "doc_id", n_chunks, staged_dir),
+    )
+    staged = docs if input_is_chunked else spark.read.parquet(staged_dir)
+    # The html-chain expression tree costs seconds of py4j construction
+    # and analysis, so the transform plan is built once, on the first
+    # chunk that runs, with the chunk id riding through as a passthrough
+    # column; each chunk only adds a partition filter (pushed down to
+    # the staged scan — pruning is plan-asserted in the tests).
+    spans_all = functools.cache(lambda: main_content_spans_df(staged, passthrough=("chunk",)))
+    n_spans = F.count(F.lit(1))
+    _run_chunks(
+        out_dir,
+        "mc_done",
+        range(n_chunks),
+        lambda c: spans_all().filter(F.col("chunk") == c).drop("chunk"),
+        lambda c: f"{out_dir}/spans/chunk={c}",
+        _MC_COUNTS,
+        [
+            n_spans.alias("n_spans"),
+            _count(F.col("kind") == "text").alias("n_text"),
+            _count(F.col("kind") == "image").alias("n_image"),
+            (-n_spans).alias("n_dropped"),  # adds to the staged span count
+        ],
+        run_id,
+        fail_on_chunk,
+        staged=staged,
+        staged_figures=(
+            F.countDistinct("doc_id").alias("n_docs"),
+            F.sum(F.size("spans")).alias("n_dropped"),
+            *_doc_range(),
+        ),
+    )
     return spark.read.parquet(f"{out_dir}/spans")

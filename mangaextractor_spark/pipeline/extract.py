@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-DEFAULT_SALT_BUCKETS = 16
+SALT_BUCKETS = 16
 
 OCR_SCHEMA = (
     "doc_id string, offset int, media_ref string, bubble_rank int, text string, "
@@ -101,10 +101,18 @@ def _kernel(engine_name: str, furigana: bool = False, robust: bool = False):
     return kern
 
 
+def _well_split(scan: DataFrame) -> bool:
+    """A page-granular-enough scan (>= cluster parallelism splits) maps
+    the kernel straight over it — no image-byte shuffle. An under-split
+    scan takes the salted repartition (pays the byte shuffle to buy
+    parallelism and kill doc-grouping skew). ``.rdd`` on a bare or
+    filtered scan only lists files; it runs no job."""
+    return scan.rdd.getNumPartitions() >= scan.sparkSession.sparkContext.defaultParallelism
+
+
 def ocr_pages(
     pages: DataFrame,
     engine: str = "glyph",
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
     num_partitions: int | None = None,
     furigana: bool = False,
     robust: bool = False,
@@ -125,13 +133,13 @@ def ocr_pages(
     under-split — e.g. pages exploded from per-doc arrays, or a scan
     with fewer splits than cores. ``num_partitions``: 0 = map directly
     (no repartition), None = salted repartition into 3x parallelism,
-    N = into N partitions. ``extract_spans`` picks automatically from
-    the media scan's split count.
+    N = into N partitions. ``extract_spans`` and the chunk runner pick
+    automatically with ``_well_split``.
     """
     if num_partitions == 0:
         return pages.mapInPandas(_kernel(engine, furigana, robust), OCR_SCHEMA)
     sc = pages.sparkSession.sparkContext
-    salt = F.pmod(F.xxhash64("media_ref"), F.lit(salt_buckets))
+    salt = F.pmod(F.xxhash64("media_ref"), F.lit(SALT_BUCKETS))
     key = F.concat_ws("#", F.col("doc_id"), salt.cast("string"))
     # 3x parallelism: small enough tasks to balance residual salt-bucket
     # skew, large enough to amortize Python-worker startup per task.
@@ -164,16 +172,10 @@ def extract_spans(
     if broadcast_meta:
         meta = F.broadcast(meta)
     pages = media.select("media_ref", "image_bytes").join(meta, "media_ref")
-    # Page-granular-enough scan (>= cluster parallelism splits): map the
-    # kernel straight over it — no image-byte shuffle. Under-split scan:
-    # salted repartition (pays the byte shuffle to buy parallelism and
-    # kill doc-grouping skew). media.rdd on the bare scan/cache only
-    # lists files, it runs no job.
-    well_split = media.rdd.getNumPartitions() >= media.sparkSession.sparkContext.defaultParallelism
     ocr = ocr_pages(
         pages,
         engine=engine,
-        num_partitions=0 if well_split else None,
+        num_partitions=0 if _well_split(media) else None,
         furigana=furigana,
         robust=robust,
     )

@@ -67,7 +67,7 @@ def main() -> None:
         "main_content = the zero-shuffle interleaved main-content "
         "pipeline (html strip / text passthrough / image placeholder) "
         "run through the chunked lineage runner "
-        "(pipeline/main_content.py): per-chunk idempotent commits + "
+        "(pipeline/checkpoint.py): per-chunk idempotent commits + "
         "mc_done lineage rows, so re-running the identical command "
         "after a kill resumes at chunk granularity (needs no media "
         "table; the transform itself is map-side)",
@@ -85,15 +85,13 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from mangaextractor_spark.pipeline.checkpoint import run_extraction
+    from mangaextractor_spark.pipeline.checkpoint import run_extraction, run_main_content
 
     # Under spark-submit the session (master, executors, confs) comes
     # from the launcher; getOrCreate just attaches to it.
     spark = SparkSession.builder.appName("mangaextractor-extract").getOrCreate()
     docs = _load(spark, args.docs)
     if args.mode == "main_content":
-        from mangaextractor_spark.pipeline.main_content import run_main_content
-
         out = run_main_content(
             spark,
             docs,

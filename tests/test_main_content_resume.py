@@ -1,5 +1,5 @@
 """Kill/resume + lineage tests for the chunked main-content runner
-(pipeline/main_content.py) — the north_rule resumability contract
+(run_main_content in pipeline/checkpoint.py) — the north_rule resumability contract
 applied to the text flagship, mirroring tests/test_resume.py for the
 OCR flagship.
 """
@@ -10,9 +10,9 @@ import json
 
 import pytest
 
-from mangaextractor_spark.pipeline.checkpoint import ChunkFailure
-from mangaextractor_spark.pipeline.main_content import (
-    completed_mc_chunks,
+from mangaextractor_spark.pipeline.checkpoint import (
+    ChunkFailure,
+    completed_chunks,
     run_main_content,
 )
 from mangaextractor_spark.queries.main_content import (
@@ -35,13 +35,14 @@ def _collect_sorted(df):
     )
 
 
-def test_kill_and_resume_equals_direct_run(spark, docs, tmp_path):
+@pytest.mark.parametrize("kill", [0, 2, N_CHUNKS - 1])
+def test_kill_and_resume_equals_direct_run(spark, docs, tmp_path, kill):
     direct = _collect_sorted(main_content_spans_df(docs))
 
     out = str(tmp_path / "mc")
     with pytest.raises(ChunkFailure):
-        run_main_content(spark, docs, out, n_chunks=N_CHUNKS, fail_on_chunk=2)
-    assert completed_mc_chunks(spark, out) == {0, 1}
+        run_main_content(spark, docs, out, n_chunks=N_CHUNKS, fail_on_chunk=kill)
+    assert completed_chunks(out, "mc_done") == set(range(kill))
 
     resumed = run_main_content(spark, docs, out, n_chunks=N_CHUNKS)
     assert _collect_sorted(resumed) == direct
@@ -88,7 +89,7 @@ def test_kill_mid_staging_rematerializes(spark, docs, tmp_path):
     (out / "_mc_manifest.json").unlink()
     run_main_content(spark, docs, str(out), n_chunks=N_CHUNKS)
     assert json.loads((out / "_mc_manifest.json").read_text())["n_chunks"] == N_CHUNKS
-    assert completed_mc_chunks(spark, str(out)) == set(range(N_CHUNKS))
+    assert completed_chunks(str(out), "mc_done") == set(range(N_CHUNKS))
 
 
 def test_chunk_filter_prunes_staged_partitions(spark, docs, tmp_path):
@@ -143,7 +144,7 @@ def test_pre_chunked_input_skips_staging(spark, docs, tmp_path):
     assert not (out / "_staged").exists(), "staging rewrite must be skipped"
     res = run_main_content(spark, chunked, str(out), n_chunks=N_CHUNKS, input_is_chunked=True)
     assert _collect_sorted(res) == _collect_sorted(main_content_spans_df(docs))
-    assert completed_mc_chunks(spark, str(out)) == set(range(N_CHUNKS))
+    assert completed_chunks(str(out), "mc_done") == set(range(N_CHUNKS))
 
 
 def test_pre_chunked_requires_chunk_column(spark, docs, tmp_path):

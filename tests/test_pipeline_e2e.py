@@ -313,7 +313,7 @@ def test_kitchen_sink_everything_at_once(spark, tmp_path):
     engine, furigana stripping and cover commit. Output must equal the
     generation golden exactly and the covers table must be populated."""
     from mangaextractor_spark.fixtures.generator import CorpusSpec, generate_corpus
-    from mangaextractor_spark.pipeline.checkpoint import covers_completed, run_extraction
+    from mangaextractor_spark.pipeline.checkpoint import completed_chunks, run_extraction
 
     corpus = generate_corpus(
         CorpusSpec(
@@ -344,7 +344,7 @@ def test_kitchen_sink_everything_at_once(spark, tmp_path):
     key = ["doc_id", "kind", "text", "media_ref", "order"]
     assert result.select(key).exceptAll(golden.select(key)).count() == 0
     assert golden.select(key).exceptAll(result.select(key)).count() == 0
-    assert covers_completed(spark, out)
+    assert completed_chunks(out, "covers_done")
     covers = spark.read.parquet(f"{out}/covers")
     assert covers.count() > 0
     assert covers.filter("cover_bytes IS NULL").count() == 0

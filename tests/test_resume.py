@@ -32,16 +32,17 @@ def _collect_sorted(df):
     )
 
 
-def test_kill_and_resume_equals_clean_run(spark, corpus_dfs, tmp_path):
+@pytest.mark.parametrize("kill", [0, 2, N_CHUNKS - 1])
+def test_kill_and_resume_equals_clean_run(spark, corpus_dfs, tmp_path, kill):
     docs, media = corpus_dfs
     clean = run_extraction(spark, docs, media, str(tmp_path / "clean"), n_chunks=N_CHUNKS)
     clean_rows = _collect_sorted(clean)
 
     out = str(tmp_path / "resumed")
     with pytest.raises(ChunkFailure):
-        run_extraction(spark, docs, media, out, n_chunks=N_CHUNKS, fail_on_chunk=2)
-    done_before = completed_chunks(spark, out)
-    assert done_before == {0, 1}, "chunks before the failure must be committed"
+        run_extraction(spark, docs, media, out, n_chunks=N_CHUNKS, fail_on_chunk=kill)
+    done_before = completed_chunks(out, "done")
+    assert done_before == set(range(kill)), "chunks before the failure must be committed"
 
     resumed = run_extraction(spark, docs, media, out, n_chunks=N_CHUNKS)
     assert _collect_sorted(resumed) == clean_rows
@@ -49,7 +50,7 @@ def test_kill_and_resume_equals_clean_run(spark, corpus_dfs, tmp_path):
     lineage = spark.read.parquet(f"{out}/_lineage")
     rows = lineage.collect()
     assert {r.chunk for r in rows} == set(range(N_CHUNKS))
-    # chunks 0,1 were written once (first run), 2,3 once (resume): no rework
+    # chunks before the kill were written once (first run), the rest once (resume): no rework
     assert len(rows) == N_CHUNKS
     for r in rows:
         assert r.status == "done"
@@ -98,6 +99,30 @@ def test_corrupt_page_is_counted_not_fatal(spark, tmp_path):
     run_extraction(spark, docs, media, out, n_chunks=2)
     lineage = spark.read.parquet(f"{out}/_lineage")
     assert lineage.agg(F.sum("n_failed_pages")).first()[0] == 1
+
+
+def test_lineage_counts_blank_pages(spark, tmp_path):
+    """A page with no regions (a white page gives none in robust mode)
+    still counts: the lineage n_pages sum equals the distinct staged
+    pages, not the pages that produced OCR rows."""
+    import numpy as np
+
+    from mangaextractor_spark.fixtures.png import encode_gray_png
+
+    corpus = generate_corpus(CorpusSpec(n_docs=6, seed=8))
+    media_pdf = corpus["media"].copy()
+    blank = np.full((600, 420), 255, dtype=np.uint8)
+    media_pdf.loc[0, "image_bytes"] = encode_gray_png(blank)
+    docs = docs_to_spark(spark, corpus["documents"])
+    media = media_to_spark(spark, media_pdf)
+
+    out = str(tmp_path / "blank")
+    run_extraction(spark, docs, media, out, n_chunks=2, robust=True)
+    staged_pages = spark.read.parquet(f"{out}/_pages").select("media_ref").distinct().count()
+    ocr_pages = spark.read.parquet(f"{out}/ocr").select("media_ref").distinct().count()
+    assert ocr_pages < staged_pages, "the blank page must yield no OCR rows"
+    lineage = spark.read.parquet(f"{out}/_lineage")
+    assert lineage.agg({"n_pages": "sum"}).first()[0] == staged_pages
 
 
 def test_resume_never_rescans_media(spark, tmp_path):
@@ -163,8 +188,6 @@ def test_covers_resume_from_staging(spark, tmp_path):
     import shutil
 
     from mangaextractor_spark.functions.covers import covers
-    from mangaextractor_spark.pipeline.checkpoint import covers_completed
-
     corpus = generate_corpus(CorpusSpec(n_docs=10, seed=31, p_cover=0.8))
     media_dir = str(tmp_path / "media_src")
     media_to_spark(spark, corpus["media"]).write.parquet(media_dir)
@@ -183,12 +206,12 @@ def test_covers_resume_from_staging(spark, tmp_path):
             spark, docs, media, out, n_chunks=N_CHUNKS,
             include_covers=True, fail_on_chunk=-1,
         )
-    assert completed_chunks(spark, out) == set(range(N_CHUNKS))
-    assert not covers_completed(spark, out)
+    assert completed_chunks(out, "done") == set(range(N_CHUNKS))
+    assert not completed_chunks(out, "covers_done")
 
     shutil.rmtree(media_dir)  # source vanishes; covers must still finish
     run_extraction(spark, docs, media, out, n_chunks=N_CHUNKS, include_covers=True)
-    assert covers_completed(spark, out)
+    assert completed_chunks(out, "covers_done")
     got = sorted(
         (r.doc_id, r.media_ref, r.thumb_w, r.thumb_h)
         for r in spark.read.parquet(f"{out}/covers").collect()
