@@ -22,8 +22,21 @@ Scope (documented):
   Other SOF processes (lossless, arithmetic, 12-bit) raise
   ``UnsupportedJpegError`` — the same explicit gating used for
   audio/video codecs (functions/multimodal.py). Malformed streams
-  (undefined Huffman/quant tables, truncated SOF) raise the same
-  domain error, never bare TypeError/KeyError.
+  (undefined Huffman/quant tables, truncated headers, a stream that
+  ends inside a scan, scan data that runs out or holds an invalid
+  code) raise the same domain error, never bare
+  IndexError/TypeError/KeyError.
+
+How decoding works: each Huffman table becomes one cached 16-bit-peek
+lookup table held as a Python list, whose entries pack symbol and code
+length and, where the magnitude bits fit the peek too, the decoded
+coefficient (``_lut``). One loop (``_decode_scans``) decodes every
+scan type — baseline, DC/AC first and refinement passes — with each
+block's symbols inlined over local variables and a flat Python list of
+zigzag coefficients per component, which reaches numpy once for the
+IDCT (two matmuls per plane). A gray load skips the scans without
+component 0 and, in an interleaved scan, decodes the chroma symbols
+only to advance the bitstream.
 
 Everything here is from the public JPEG (ITU-T T.81) spec: the
 quantization tables are Annex K.1/K.2, the Huffman tables Annex K.3.
@@ -153,18 +166,30 @@ def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, i
     return out
 
 
-@lru_cache(maxsize=16)
-def _peek_tables(key: tuple) -> tuple[np.ndarray, np.ndarray]:
-    """16-bit-peek decode LUTs: sym16[peek], len16[peek]."""
+@lru_cache(maxsize=32)
+def _lut(key: tuple, al: int) -> list[int]:
+    """16-bit-peek decode table of one Huffman table ``(bits, vals)``,
+    as a Python list: a list index costs far less than a numpy scalar
+    load. The entry for peek ``p`` packs ``sym << 8 | length``; 0 marks
+    an invalid code. Where the code and the magnitude bits after it fit
+    in the peek, the entry also carries the coefficient they decode to,
+    already scaled by the scan's ``al``, and counts those bits too:
+    ``value << 16 | sym << 8 | (length + size)``. Values are never 0,
+    so ``entry >> 16`` tells the two kinds apart."""
     bits, vals = list(key[0]), list(key[1])
-    sym16 = np.zeros(1 << 16, dtype=np.int16)
-    len16 = np.zeros(1 << 16, dtype=np.int8)
+    lut = np.zeros(1 << 16, dtype=np.int64)
+    peek = np.arange(1 << 16, dtype=np.int64)
     for sym, (code, length) in _canonical_codes(bits, vals).items():
         lo = code << (16 - length)
         hi = lo + (1 << (16 - length))
-        sym16[lo:hi] = sym
-        len16[lo:hi] = length
-    return sym16, len16
+        size = sym & 15
+        lut[lo:hi] = sym << 8 | length
+        if size and length + size <= 16:
+            mag = (peek[lo:hi] >> (16 - length - size)) & ((1 << size) - 1)
+            val = np.where(mag >> (size - 1), mag, mag + 1 - (1 << size)) << al
+            lut[lo:hi] = val << 16 | sym << 8 | (length + size)
+    shared: dict[int, int] = {}  # one int object per distinct entry
+    return [shared.setdefault(e, e) for e in lut.tolist()]
 
 
 @lru_cache(maxsize=1)
@@ -413,55 +438,36 @@ def encode_color_jpeg(
     return out
 
 
-def _extend(v: int, size: int) -> int:
-    return v - (1 << size) + 1 if v < (1 << (size - 1)) else v
-
-
-class _BitReader:
-    """Entropy-segment reader over stuffing-stripped bytes, O(1) peeks
-    via a per-byte 32-bit window table."""
-
-    def __init__(self, data: bytes) -> None:
-        padded = data + b"\x00\x00\x00\x00"
-        a = np.frombuffer(padded, dtype=np.uint8).astype(np.uint32)
-        self.win = (
-            (a[:-3] << 24) | (a[1:-2] << 16) | (a[2:-1] << 8) | a[3:]
-        ).tolist()
-        self.pos = 0
-        self.nbits = len(data) * 8
-
-    def peek16(self) -> int:
-        byte, sh = self.pos >> 3, self.pos & 7
-        return (self.win[byte] >> (16 - sh)) & 0xFFFF
-
-    def read(self, n: int) -> int:
-        byte, sh = self.pos >> 3, self.pos & 7
-        v = (self.win[byte] >> (32 - sh - n)) & ((1 << n) - 1)
-        self.pos += n
-        return v
+def _window(seg: bytes) -> tuple[list[int], int]:
+    """Entropy-coded segment -> (32-bit big-endian window at every byte
+    of the un-stuffed data, its bit count). Four zero bytes pad the
+    tail, so a peek near the end stays in range."""
+    data = seg.replace(b"\xff\x00", b"\xff")
+    a = np.frombuffer(data + b"\x00\x00\x00\x00", dtype=np.uint8).astype(np.uint32)
+    win = ((a[:-3] << 24) | (a[1:-2] << 16) | (a[2:-1] << 8) | a[3:]).tolist()
+    return win, len(data) * 8
 
 
 def _entropy_segments(b: bytes, start: int) -> tuple[list[bytes], int]:
     """Entropy-coded data from ``start`` to the next non-RST marker,
-    split at restart markers; returns (segments, index of the marker)."""
-    j = start
+    split at restart markers; returns (segments, index of the marker).
+    A stream that ends first is truncated."""
     segments: list[bytes] = []
-    seg_begin = j
-    while j < len(b) - 1:
-        if b[j] == 0xFF:
-            nxt = b[j + 1]
-            if nxt == 0x00:
-                j += 2
-                continue
-            segments.append(b[seg_begin:j])
-            if 0xD0 <= nxt <= 0xD7:  # RSTn
-                j += 2
-                seg_begin = j
-                continue
-            return segments, j
-        j += 1
-    segments.append(b[seg_begin : j + 1])
-    return segments, len(b)
+    seg_begin = j = start
+    while True:
+        j = b.find(b"\xff", j)
+        if j < 0 or j + 1 >= len(b):
+            raise UnsupportedJpegError("stream ends inside a scan (truncated)")
+        nxt = b[j + 1]
+        if nxt == 0x00:
+            j += 2
+            continue
+        segments.append(b[seg_begin:j])
+        if 0xD0 <= nxt <= 0xD7:  # RSTn
+            j += 2
+            seg_begin = j
+            continue
+        return segments, j
 
 
 def _parse_jpeg(b: bytes):
@@ -511,6 +517,8 @@ def _parse_jpeg_inner(b: bytes):
                 pq, tq = payload[j] >> 4, payload[j] & 15
                 if pq != 0:
                     raise UnsupportedJpegError("16-bit quant tables unsupported")
+                if j + 65 > len(payload):
+                    raise UnsupportedJpegError("truncated quantization table")
                 tbl = np.zeros(64, dtype=np.int32)
                 tbl[ZIGZAG] = np.frombuffer(payload[j + 1 : j + 65], dtype=np.uint8)
                 qtables[tq] = tbl.reshape(8, 8)
@@ -606,259 +614,195 @@ def _geometry(h: int, w: int, components: list[dict]) -> tuple[int, int]:
     return mcux, mcuy
 
 
-def _require_tables(scomps, need_dc: bool, need_ac: bool):
+def _require_tables(scomps, need_dc: bool, need_ac: bool, al: int):
+    """[(component index, DC LUT, AC LUT)] for one scan; a table the
+    scan does not use is None."""
     out = []
     for ci, dck, ack in scomps:
         if need_dc and dck is None:
             raise UnsupportedJpegError("scan references undefined DC Huffman table")
         if need_ac and ack is None:
             raise UnsupportedJpegError("scan references undefined AC Huffman table")
-        out.append(
-            (
-                ci,
-                _peek_tables(dck) if dck is not None else (None, None),
-                _peek_tables(ack) if ack is not None else (None, None),
-            )
-        )
+        if need_dc and max(dck[1], default=0) > 15:
+            raise UnsupportedJpegError("DC Huffman table holds a size above 15")
+        out.append((ci, _lut(dck, al) if need_dc else None, _lut(ack, al) if need_ac else None))
     return out
 
 
-def _decode_sequential(scans, components, mcux: int, mcuy: int) -> list[np.ndarray]:
-    """Baseline decode of every scan; returns per-component zz arrays
-    shaped (gh*gw, 64) in interleaved-grid raster order."""
-    zz = [np.zeros((c["gh"] * c["gw"], 64), dtype=np.int64) for c in components]
+def _block_order(scomps, components, mcux: int, mcuy: int, keep: int):
+    """One scan's blocks in coding order as (scan component, base)
+    pairs, base being the block's offset in its component's flat
+    coefficient list (0 for a component not kept); returns (blocks,
+    blocks per MCU). A single-component scan codes the component's
+    own nh x nw blocks (T.81 A.2.2), an interleaved one whole MCUs."""
+    if len(scomps) == 1:
+        c = components[scomps[0][0]]
+        gw = c["gw"]
+        return [(0, (gy * gw + gx) * 64) for gy in range(c["nh"]) for gx in range(c["nw"])], 1
+    units = []
+    for si, (ci, _, _) in enumerate(scomps):
+        c = components[ci]
+        units += [(si, ci, c, by, bx) for by in range(c["v"]) for bx in range(c["h"])]
+    blocks = [
+        (si, ((my * c["v"] + by) * c["gw"] + mx * c["h"] + bx) * 64 if ci < keep else 0)
+        for my in range(mcuy)
+        for mx in range(mcux)
+        for si, ci, c, by, bx in units
+    ]
+    return blocks, len(units)
+
+
+def _decode_scans(scans, components, mcux: int, mcuy: int, keep: int) -> list[list[int]]:
+    """Entropy-decode every scan into one flat list of zigzag-order
+    coefficients per kept component (the first ``keep``), 64 per block
+    of its gh x gw grid.
+
+    One loop serves every scan type: a baseline scan is a first pass
+    over band 0..63 at Al 0; progressive scans follow T.81 G.1.2 (DC
+    and AC first passes, refinement passes with one correction bit per
+    already-nonzero coefficient, EOB runs), as libjpeg decodes them.
+    A block's symbols are decoded inline over local variables, with no
+    call per block or symbol: per-call overhead dominated the decode.
+    An interleaved scan still decodes the symbols of components not
+    kept, into a scratch block, to advance the bitstream."""
+    zz = [[0] * (64 * c["gh"] * c["gw"]) for c in components[:keep]]
+    scratch = [0] * 80  # a block plus the longest run past its end
     for ss, se, ah, al, scomps, restart, segments in scans:
-        tabs = _require_tables(scomps, True, True)
-        interleaved = len(scomps) > 1
-        if interleaved:
-            units = []
-            for si, (ci, _, _) in enumerate(scomps):
-                c = components[ci]
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        units.append((si, ci, c["v"], c["h"], c["gw"], by, bx))
-            n_mcus = mcux * mcuy
-        else:
-            ci = scomps[0][0]
-            c = components[ci]
-            n_mcus = c["nh"] * c["nw"]
-        done = 0
-        for seg_bytes in segments:
-            rd = _BitReader(seg_bytes.replace(b"\xff\x00", b"\xff"))
-            prev = [0] * len(scomps)
-            limit = min(n_mcus, done + restart) if restart else n_mcus
-            # The final block's codes may end inside the byte-align
-            # flush padding, so don't require 16 whole bits to remain —
-            # the reader's zero-padded window makes trailing peeks
-            # safe; the block count is the real terminator.
-            while done < limit and rd.pos <= rd.nbits + 8:
-                if interleaved:
-                    my, mx = divmod(done, mcux)
-                    for si, ci, cv, ch, gw, by, bx in units:
-                        idx = (my * cv + by) * gw + (mx * ch + bx)
-                        prev[si] = _decode_block(
-                            rd, tabs[si][1], tabs[si][2], zz[ci], idx, prev[si]
-                        )
-                else:
-                    gy, gx = divmod(done, c["nw"])
-                    prev[0] = _decode_block(
-                        rd, tabs[0][1], tabs[0][2], zz[ci], gy * c["gw"] + gx, prev[0]
-                    )
-                done += 1
-            if done >= n_mcus:
-                break
-    return zz
-
-
-def _decode_block(rd, dc_tab, ac_tab, zz, idx, prev_dc) -> int:
-    dsym, dlen = dc_tab
-    asym, alen = ac_tab
-    p = rd.peek16()
-    size = int(dsym[p])
-    ln = int(dlen[p])
-    if ln == 0:
-        raise UnsupportedJpegError("invalid Huffman code in scan data")
-    rd.pos += ln
-    if size:
-        prev_dc += _extend(rd.read(size), size)
-    row = zz[idx]
-    row[0] = prev_dc
-    k = 1
-    while k < 64:
-        p = rd.peek16()
-        sym = int(asym[p])
-        ln = int(alen[p])
-        if ln == 0:
-            raise UnsupportedJpegError("invalid Huffman code in scan data")
-        rd.pos += ln
-        if sym == 0x00:
-            break
-        if sym == 0xF0:
-            k += 16
-            continue
-        k += sym >> 4
-        size = sym & 15
-        if k > 63:
-            raise UnsupportedJpegError("AC run overflows block")
-        row[k] = _extend(rd.read(size), size)
-        k += 1
-    return prev_dc
-
-
-def _decode_progressive(scans, components, mcux: int, mcuy: int) -> list[np.ndarray]:
-    """T.81 G.1.2 successive-approximation decode. DC scans may be
-    interleaved (Ns up to 3); AC scans are single-component per spec.
-    Semantics follow the spec (and every mainstream decoder): new AC
-    coefficients arrive as ±1<<Al; refinement passes one correction
-    bit per already-nonzero coefficient traversed."""
-    zz = [[[0] * 64 for _ in range(c["gh"] * c["gw"])] for c in components]
-    for ss, se, ah, al, scomps, restart, segments in scans:
-        if ss != 0 and len(scomps) > 1:
+        if ss and len(scomps) > 1:
             # T.81 G.1: progressive AC scans are single-component; an
             # interleaved one must be rejected, not decoded as if it
             # were scomps[0]'s non-interleaved block order.
             raise UnsupportedJpegError("interleaved AC scan in progressive stream")
-        if ss == 0:  # DC scan (first or refinement)
-            tabs = _require_tables(scomps, ah == 0, False)
-            if se != 0:
-                raise UnsupportedJpegError(
-                    "malformed progressive scan (DC scan must have Se=0)"
-                )
-            interleaved = len(scomps) > 1
-            if interleaved:
-                units = []
-                for si, (ci, _, _) in enumerate(scomps):
-                    c = components[ci]
-                    for by in range(c["v"]):
-                        for bx in range(c["h"]):
-                            units.append((si, ci, c["v"], c["h"], c["gw"], by, bx))
-                n_mcus = mcux * mcuy
-            else:
-                ci = scomps[0][0]
-                c = components[ci]
-                n_mcus = c["nh"] * c["nw"]
-            done = 0
-            for seg_bytes in segments:
-                rd = _BitReader(seg_bytes.replace(b"\xff\x00", b"\xff"))
-                prev = [0] * len(scomps)
-                limit = min(n_mcus, done + restart) if restart else n_mcus
-                while done < limit:
-                    if interleaved:
-                        my, mx = divmod(done, mcux)
-                        targets = [
-                            (si, ci2, (my * cv + by) * gw + (mx * ch + bx))
-                            for si, ci2, cv, ch, gw, by, bx in units
-                        ]
+        if se > 63 or ss > se:
+            raise UnsupportedJpegError(f"malformed scan band {ss}..{se}")
+        tabs = _require_tables(scomps, not ss and not ah, se > 0, al)
+        units = [(zz[ci] if ci < keep else scratch, dc, ac) for ci, dc, ac in tabs]
+        blocks, per_mcu = _block_order(scomps, components, mcux, mcuy, keep)
+        step = restart * per_mcu or len(blocks)
+        if len(segments) * step < len(blocks):
+            raise UnsupportedJpegError("scan data ends before its last block")
+        p1, m1 = 1 << al, -1 << al
+        for start, seg in zip(range(0, len(blocks), step), segments):
+            win, nbits = _window(seg)
+            pos = eobrun = 0
+            pred = [0] * len(units)
+            for si, base in blocks[start : start + step]:
+                out, dct, act = units[si]
+                if not ss:
+                    if ah:  # DC refinement: one bit
+                        if (win[pos >> 3] >> (31 - (pos & 7))) & 1:
+                            out[base] |= p1
+                        pos += 1
                     else:
-                        gy, gx = divmod(done, c["nw"])
-                        targets = [(0, ci, gy * c["gw"] + gx)]
-                    for si, ci2, idx in targets:
-                        if ah == 0:
-                            dsym, dlen = tabs[si][1]
-                            p = rd.peek16()
-                            size = int(dsym[p])
-                            ln = int(dlen[p])
-                            if ln == 0:
-                                raise UnsupportedJpegError(
-                                    "invalid Huffman code in scan data"
-                                )
-                            rd.pos += ln
-                            if size:
-                                prev[si] += _extend(rd.read(size), size)
-                            zz[ci2][idx][0] = prev[si] << al
-                        else:
-                            if rd.read(1):
-                                zz[ci2][idx][0] |= 1 << al
-                    done += 1
-            continue
-        # AC scan — single component, non-interleaved block order.
-        tabs = _require_tables(scomps, False, True)
-        ci = scomps[0][0]
-        c = components[ci]
-        asym, alen = tabs[0][2]
-        zzc = zz[ci]
-        nw, gw = c["nw"], c["gw"]
-        n_blocks = c["nh"] * nw
-        p1, m1 = 1 << al, -(1 << al)
-        done = 0
-        for seg_bytes in segments:
-            rd = _BitReader(seg_bytes.replace(b"\xff\x00", b"\xff"))
-            eobrun = 0
-            limit = min(n_blocks, done + restart) if restart else n_blocks
-            while done < limit:
-                gy, gx = divmod(done, nw)
-                row = zzc[gy * gw + gx]
-                if ah == 0:  # first pass for this band
-                    if eobrun:
-                        eobrun -= 1
-                        done += 1
+                        e = dct[(win[pos >> 3] >> (16 - (pos & 7))) & 0xFFFF]
+                        pos += e & 31
+                        v = e >> 16
+                        if not v:
+                            s = (e >> 8) & 15
+                            if s:
+                                v = (win[pos >> 3] >> (32 - (pos & 7) - s)) & ((1 << s) - 1)
+                                pos += s
+                                v = (v if v >> (s - 1) else v + 1 - (1 << s)) << al
+                            elif not e:
+                                raise UnsupportedJpegError("invalid Huffman code in scan data")
+                        pred[si] += v
+                        out[base] = pred[si]
+                    if not se:
                         continue
+                if ah:  # AC refinement
                     k = ss
-                    while k <= se:
-                        p = rd.peek16()
-                        sym = int(asym[p])
-                        rd.pos += int(alen[p])
-                        r, size = sym >> 4, sym & 15
-                        if size == 0:
-                            if r < 15:
-                                eobrun = (1 << r) - 1
+                    if not eobrun:
+                        while k <= se:
+                            e = act[(win[pos >> 3] >> (16 - (pos & 7))) & 0xFFFF]
+                            pos += e & 31
+                            r = (e >> 12) & 15
+                            s = (e >> 8) & 15
+                            if s == 1:  # a new coefficient of +-p1
+                                v = e >> 16
+                                if not v:  # a 16-bit code: its sign bit is past the peek
+                                    v = p1 if (win[pos >> 3] >> (31 - (pos & 7))) & 1 else m1
+                                    pos += 1
+                            elif s or not e:
+                                raise UnsupportedJpegError("invalid Huffman code in refinement scan")
+                            elif r < 15:  # EOBr: this block and 2^r + bits - 1 more
+                                eobrun = 1 << r
                                 if r:
-                                    eobrun += rd.read(r)
+                                    eobrun += (win[pos >> 3] >> (32 - (pos & 7) - r)) & ((1 << r) - 1)
+                                    pos += r
                                 break
-                            k += 16  # ZRL
-                            continue
-                        k += r
-                        row[k] = _extend(rd.read(size), size) << al
-                        k += 1
-                else:  # refinement pass
-                    k = ss
-                    if eobrun == 0:
-                        while k <= se:
-                            p = rd.peek16()
-                            sym = int(asym[p])
-                            rd.pos += int(alen[p])
-                            r, size = sym >> 4, sym & 15
-                            val = 0
-                            if size == 0:
-                                if r < 15:
-                                    eobrun = (1 << r) - 1
-                                    if r:
-                                        eobrun += rd.read(r)
-                                    break
-                                # r == 15: pass 16 zero-history coefs
-                            else:
-                                val = p1 if rd.read(1) else m1
+                            else:  # ZRL: pass 16 zero-history coefficients
+                                v = 0
                             while k <= se:
-                                if row[k] != 0:
-                                    if rd.read(1) and (row[k] & p1) == 0:
-                                        row[k] += p1 if row[k] >= 0 else m1
-                                else:
-                                    if r == 0:
-                                        break
+                                c = out[base + k]
+                                if c:
+                                    if (win[pos >> 3] >> (31 - (pos & 7))) & 1 and not c & p1:
+                                        out[base + k] = c + (p1 if c >= 0 else m1)
+                                    pos += 1
+                                elif r:
                                     r -= 1
+                                else:
+                                    break
                                 k += 1
-                            if val and k <= se:
-                                row[k] = val
+                            if v and k <= se:
+                                out[base + k] = v
                             k += 1
-                    if eobrun > 0:
+                    if eobrun:
                         while k <= se:
-                            if row[k] != 0:
-                                if rd.read(1) and (row[k] & p1) == 0:
-                                    row[k] += p1 if row[k] >= 0 else m1
+                            c = out[base + k]
+                            if c:
+                                if (win[pos >> 3] >> (31 - (pos & 7))) & 1 and not c & p1:
+                                    out[base + k] = c + (p1 if c >= 0 else m1)
+                                pos += 1
                             k += 1
                         eobrun -= 1
-                done += 1
-    return [np.asarray(z, dtype=np.int64) for z in zz]
+                elif eobrun:  # inside an AC first pass's EOB run
+                    eobrun -= 1
+                else:  # AC first pass; k indexes ``out`` directly
+                    k, end = base + (ss or 1), base + se
+                    while k <= end:
+                        e = act[(win[pos >> 3] >> (16 - (pos & 7))) & 0xFFFF]
+                        pos += e & 31
+                        v = e >> 16
+                        if v:
+                            k += (e >> 12) & 15
+                            out[k] = v
+                            k += 1
+                            continue
+                        s = (e >> 8) & 15
+                        r = e >> 12
+                        if s:
+                            k += r
+                            v = (win[pos >> 3] >> (32 - (pos & 7) - s)) & ((1 << s) - 1)
+                            pos += s
+                            out[k] = (v if v >> (s - 1) else v + 1 - (1 << s)) << al
+                            k += 1
+                        elif r == 15:  # ZRL
+                            k = min(k + 16, end + 1)
+                        elif e:  # EOBr: this block and 2^r + bits - 1 more
+                            eobrun = (1 << r) - 1
+                            if r:
+                                eobrun += (win[pos >> 3] >> (32 - (pos & 7) - r)) & ((1 << r) - 1)
+                                pos += r
+                            break
+                        else:
+                            raise UnsupportedJpegError("invalid Huffman code in scan data")
+                    if k > end + 1:
+                        raise UnsupportedJpegError("AC run overflows block")
+            if pos > nbits:
+                raise UnsupportedJpegError("entropy-coded segment ends mid-block (truncated)")
+    return zz
 
 
-def _idct_plane(zzc: np.ndarray, c: dict) -> np.ndarray:
-    """Component zz coefficients (gh*gw, 64) -> uint8 plane cropped to
-    the component's pixel dims (ph, pw)."""
-    coef = np.zeros((zzc.shape[0], 64), dtype=np.float64)
-    coef[:, ZIGZAG] = zzc
-    coef = coef.reshape(-1, 8, 8) * c["qt"]
+_UNZIGZAG = np.argsort(ZIGZAG)
+
+
+def _idct_plane(zzc: list[int], c: dict) -> np.ndarray:
+    """Component zigzag coefficients (flat, 64 per block of the gh x gw
+    grid) -> uint8 plane cropped to the component's pixel dims (ph, pw)."""
+    coef = np.fromiter(zzc, dtype=np.int64, count=len(zzc)).reshape(-1, 64)[:, _UNZIGZAG]
+    coef = (coef * c["qt"].reshape(64)).astype(np.float64).reshape(-1, 8, 8)
     m = _dct_matrix()
-    pix = np.einsum("ji,njk,kl->nil", m, coef, m) + 128.0
+    pix = m.T @ coef @ m + 128.0
     img = (
         pix.reshape(c["gh"], c["gw"], 8, 8)
         .transpose(0, 2, 1, 3)
@@ -870,12 +814,18 @@ def _idct_plane(zzc: np.ndarray, c: dict) -> np.ndarray:
 def _decode_planes(b: bytes, want: str):
     sof_marker, h, w, components, scans = _parse_jpeg(b)
     mcux, mcuy = _geometry(h, w, components)
-    if sof_marker == 0xC0:
-        zz = _decode_sequential(scans, components, mcux, mcuy)
-    else:
-        zz = _decode_progressive(scans, components, mcux, mcuy)
-    idx = [0] if want == "luma" else range(len(components))
-    planes = {i: _idct_plane(zz[i], components[i]) for i in idx}
+    keep = 1 if want == "luma" else len(components)
+    if sof_marker == 0xC0:  # a baseline scan codes whole blocks
+        scans = [(0, 63, 0, 0, *scan[4:]) for scan in scans]
+    elif any(ss == 0 and se != 0 for ss, se, *_ in scans):
+        raise UnsupportedJpegError("malformed progressive scan (DC scan must have Se=0)")
+    # A luma load skips the scans that carry only chroma.
+    scans = [scan for scan in scans if any(ci < keep for ci, _, _ in scan[4])]
+    try:
+        zz = _decode_scans(scans, components, mcux, mcuy, keep)
+    except IndexError as e:  # read or wrote past the data: truncated or corrupt
+        raise UnsupportedJpegError(f"corrupt entropy-coded data: {e}") from e
+    planes = {i: _idct_plane(zz[i], components[i]) for i in range(keep)}
     return h, w, components, planes
 
 

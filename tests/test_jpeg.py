@@ -7,6 +7,8 @@ modules/detection.py:41)."""
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pytest
 
@@ -249,13 +251,108 @@ def test_mixed_format_corpus_end_to_end(spark):
         assert golden.select(key).exceptAll(result.select(key)).count() == 0, robust
 
 
+@pytest.mark.parametrize("progressive", [False, True])
+@pytest.mark.parametrize("keep", [0.3, 0.6, 0.9, 0.99])
+def test_truncated_stream_raises_domain_error(progressive, keep):
+    """A stream cut short raises UnsupportedJpegError, never IndexError:
+    for both loads when it ends inside a scan, and for the full decode
+    when a scan's data runs out before a marker (here an EOI put back)."""
+    rng = np.random.default_rng(17)
+    rgb = np.clip(rng.normal(140, 40, (64, 48, 3)), 0, 255).astype(np.uint8)
+    b = encode_color_jpeg(rgb, 92, "420", progressive=progressive)
+    cut = b[: int(len(b) * keep)]
+    for decode in (decode_gray_jpeg, decode_rgb_jpeg):
+        with pytest.raises(UnsupportedJpegError):
+            decode(cut)
+    with pytest.raises(UnsupportedJpegError):
+        decode_rgb_jpeg(cut + b"\xff\xd9")
+
+
+def test_corrupt_stream_raises_domain_error():
+    """Random byte flips in small baseline and progressive streams either
+    decode or raise UnsupportedJpegError, never IndexError or another
+    error from a read or write past the data."""
+    import random
+
+    rng, flips = np.random.default_rng(18), random.Random(18)
+    rgb = np.clip(rng.normal(140, 40, (40, 32, 3)), 0, 255).astype(np.uint8)
+    streams = [encode_color_jpeg(rgb, 90, "420", progressive=p) for p in (False, True)]
+    for _ in range(300):
+        b = bytearray(flips.choice(streams))
+        for _ in range(flips.randint(1, 3)):
+            b[flips.randrange(2, len(b))] = flips.randrange(256)
+        for decode in (decode_gray_jpeg, decode_rgb_jpeg):
+            try:
+                decode(bytes(b))
+            except UnsupportedJpegError:
+                pass
+
+
+def test_progressive_refinement_scans():
+    """Successive approximation (T.81 G.1.2.3): AC first passes at Al=1,
+    then a refinement pass whose EOB run (EOB1: this block and the
+    next) is followed by one correction bit per coefficient already
+    nonzero, must restore the exact coefficients of a baseline stream."""
+    import struct
+
+    from mangaextractor_spark.fixtures import jpeg as J
+
+    dc = J._canonical_codes(J.DC_BITS, J.DC_VALS)
+    ac = J._canonical_codes(J.AC_BITS, J.AC_VALS)
+    eob_bits = [0, 2] + [0] * 14  # AC table 1: EOB0 "00", EOB1 "01"
+    blk = [40, 3, -5] + [0] * 61  # two equal blocks: 16x8 pixels, unit quantizers
+
+    def scan(tables: int, sos: list[int], emit) -> bytes:
+        bw = J._BitWriter()
+        emit(bw.write)
+        return J._seg(0xFFDA, bytes([1, 1, tables, *sos])) + bw.flush()
+
+    def stream(sof: int, scans: list[bytes]) -> bytes:
+        return (
+            b"\xff\xd8"
+            + J._seg(0xFFDB, b"\x00" + bytes([1] * 64))
+            + J._seg(sof, struct.pack(">BHHB", 8, 8, 16, 1) + b"\x01\x11\x00")
+            + J._seg(0xFFC4, b"\x00" + bytes(J.DC_BITS) + bytes(J.DC_VALS))
+            + J._seg(0xFFC4, b"\x10" + bytes(J.AC_BITS) + bytes(J.AC_VALS))
+            + J._seg(0xFFC4, b"\x11" + bytes(eob_bits) + b"\x00\x10")
+            + b"".join(scans)
+            + b"\xff\xd9"
+        )
+
+    def baseline(write):
+        J._write_block(write, blk, 2, J._write_block(write, blk, 2, 0, dc, ac), dc, ac)
+
+    def dc_first(write):
+        J._write_dc(write, 40, J._write_dc(write, 40, 0, dc), dc)
+
+    def ac_first(write):  # |coef| >> 1 with its sign
+        for _ in range(2):
+            J._write_ac_band(write, [40, 1, -2] + [0] * 61, 2, ac)
+
+    def ac_refine(write):
+        write(0b01, 2)  # EOB1
+        write(0, 1)  # run = 2 + 0
+        write(0b1111, 4)  # low bits of |3| and |-5|, block by block
+
+    base = stream(0xFFC0, [scan(0x00, [0, 63, 0x00], baseline)])
+    prog = stream(
+        0xFFC2,
+        [
+            scan(0x00, [0, 0, 0x00], dc_first),
+            scan(0x00, [1, 63, 0x01], ac_first),
+            scan(0x01, [1, 63, 0x10], ac_refine),
+        ],
+    )
+    assert (decode_gray_jpeg(prog) == decode_gray_jpeg(base)).all()
+
+
 def test_rejects_interleaved_progressive_ac_scan():
     """T.81 G.1: progressive AC scans are single-component; an
     interleaved one must raise, not decode as scomps[0]'s block order."""
     from mangaextractor_spark.fixtures.jpeg import (
         AC_BITS,
         AC_VALS,
-        _decode_progressive,
+        _decode_scans,
     )
 
     comp = {"id": 1, "h": 1, "v": 1, "gw": 1, "gh": 1, "nw": 1, "nh": 1}
@@ -263,4 +360,126 @@ def test_rejects_interleaved_progressive_ac_scan():
     tbl = (tuple(AC_BITS), tuple(AC_VALS))
     scan = (1, 63, 0, 0, [(0, None, tbl), (1, None, tbl)], 0, [b"\x00"])
     with pytest.raises(UnsupportedJpegError, match="interleaved AC"):
-        _decode_progressive([scan], [comp, comp2], 1, 1)
+        _decode_scans([scan], [comp, comp2], 1, 1, 2)
+
+
+def _split_scans(b: bytes) -> tuple[bytes, list[tuple[bytes, bytes]]]:
+    """An encoder-written stream -> (header before the first SOS,
+    [(SOS segment, entropy-coded data)]). Entropy data never holds
+    0xFF followed by 0xDA (stuffing writes 0xFF 0x00)."""
+    head, *parts = b[:-2].split(b"\xff\xda")
+    scans = []
+    for p in parts:
+        n = int.from_bytes(p[:2], "big")
+        scans.append((b"\xff\xda" + p[:n], p[n:]))
+    return head, scans
+
+
+def _with_restarts(encode, img: np.ndarray, rows: int, intervals: list[int]) -> bytes:
+    """The stream an encoder with a restart interval of one MCU row
+    writes: ``img`` is encoded in bands of ``rows`` (the MCU height),
+    whose scans (blocks code independently, and each band starts its
+    DC predictions afresh) are spliced behind the whole image's header,
+    RSTn between bands, with a DRI of ``intervals[k]`` units before
+    scan k."""
+    head, scans = _split_scans(encode(img))
+    bands = [_split_scans(encode(img[y : y + rows]))[1] for y in range(0, img.shape[0], rows)]
+    out = head
+    for k, ((sos, _), interval) in enumerate(zip(scans, intervals)):
+        data = [band[k][1] for band in bands]
+        out += b"\xff\xdd\x00\x04" + interval.to_bytes(2, "big") + sos
+        out += b"".join(d + bytes([0xFF, 0xD0 + i % 8]) for i, d in enumerate(data[:-1]))
+        out += data[-1]
+    return out + b"\xff\xd9"
+
+
+def _golden_streams() -> dict[str, bytes]:
+    """The fixed stream matrix behind the pinned decode digests."""
+    from mangaextractor_spark.fixtures.generator import CorpusSpec, _tint_rgb, generate_corpus
+    from mangaextractor_spark.fixtures.png import decode_gray_png
+
+    rng = np.random.default_rng(31)
+    gray = np.clip(rng.normal(150, 40, (61, 45)), 0, 255).astype(np.uint8)
+    rgb = np.clip(rng.normal(140, 40, (61, 45, 3)), 0, 255).astype(np.uint8)
+    square = np.clip(rng.normal(128, 40, (40, 40, 3)), 0, 255).astype(np.uint8)
+    streams = {"gray": encode_gray_jpeg(gray, quality=90)}
+    for sub in ("444", "422", "440", "420"):
+        for prog in (False, True):
+            streams[f"color{sub}{'P' if prog else 'B'}"] = encode_color_jpeg(
+                rgb, quality=92, subsampling=sub, progressive=prog
+            )
+    # One MCU row per restart interval; 40 columns are 5 luma blocks
+    # and 3 MCUs (and 3 chroma blocks) at 4:2:2.
+    streams["gray_rst"] = _with_restarts(encode_gray_jpeg, gray[:56], 8, [6])
+    for prog, intervals in ((False, [3]), (True, [3, 5, 3, 3])):
+        encode = lambda im: encode_color_jpeg(im, 90, "422", progressive=prog)
+        streams[f"color422{'P' if prog else 'B'}_rst"] = _with_restarts(encode, square, 8, intervals)
+    for shape in ((17, 9), (33, 47)):
+        odd = np.clip(rng.normal(128, 50, shape + (3,)), 0, 255).astype(np.uint8)
+        for prog in (False, True):
+            streams[f"odd{shape[0]}x{shape[1]}{'P' if prog else 'B'}"] = encode_color_jpeg(
+                odd, 95, "420", progressive=prog
+            )
+    streams["odd5x13"] = encode_gray_jpeg(gray[:5, :13], quality=90)
+    noisy = dict(vertical_text=True, p_furigana=0.5, bubble_fill=235, p_speckle=0.05, border_art=True)
+    c = generate_corpus(CorpusSpec(n_docs=1, seed=5, max_pages=1, p_text_span=0.0, **noisy))
+    page = decode_gray_png(bytes(c["media"]["image_bytes"][0]))
+    streams["page_gray"] = encode_gray_jpeg(page, quality=95)
+    for prog in (False, True):
+        streams[f"page_color{'P' if prog else 'B'}"] = encode_color_jpeg(
+            _tint_rgb(page), quality=95, subsampling="420", progressive=prog
+        )
+    return streams
+
+
+def _digest(b: bytes) -> str:
+    return hashlib.sha256(b).hexdigest()[:16]
+
+
+# name -> SHA-256 prefixes of (stream, decode_gray_jpeg, decode_rgb_jpeg),
+# each output hashed with its shape. The decoder must reproduce these
+# pixels exactly; a stream digest that moves means the encoder or the
+# page generator changed, not the decoder.
+_PINNED = {
+    "gray": ("06716de8ac380e6e", "7091cb0131964672", "1608b80475cb3f80"),
+    "color444B": ("e88f09ea2756634a", "a2a404f3e0c098a6", "787b72a510580585"),
+    "color444P": ("ea3c1f971d248237", "a2a404f3e0c098a6", "787b72a510580585"),
+    "color422B": ("6c31f768b323d86a", "a2a404f3e0c098a6", "375b84ff97ab2295"),
+    "color422P": ("56ef591f33d9c3ed", "a2a404f3e0c098a6", "375b84ff97ab2295"),
+    "color440B": ("00e28f9839926aab", "a2a404f3e0c098a6", "225d48fdb1efc7bf"),
+    "color440P": ("44dafb02437f6425", "a2a404f3e0c098a6", "225d48fdb1efc7bf"),
+    "color420B": ("3897e4855a1bf444", "a2a404f3e0c098a6", "5ef1de3bd0ee81d7"),
+    "color420P": ("2de8e054762c5338", "a2a404f3e0c098a6", "5ef1de3bd0ee81d7"),
+    "gray_rst": ("aee06501a5c505c4", "f6aed27763d5678e", "9684f8f98433e8c8"),
+    "color422B_rst": ("49aceaf2346ab9ba", "c02c7aaa5db95ffa", "0f2205a035ebc2ac"),
+    "color422P_rst": ("8d6dbeb0555fd353", "c02c7aaa5db95ffa", "0f2205a035ebc2ac"),
+    "odd17x9B": ("586442404934d623", "e12c6f429e4108df", "229fba3e9e531fa5"),
+    "odd17x9P": ("b741977dbb967564", "e12c6f429e4108df", "229fba3e9e531fa5"),
+    "odd33x47B": ("bf0830207717e1ce", "0018429f98f620cd", "d7dc6a3acc26563d"),
+    "odd33x47P": ("2a1a7e5b2aefb685", "0018429f98f620cd", "d7dc6a3acc26563d"),
+    "odd5x13": ("1b81ecc6767cc382", "48d7d0857db29ba7", "9f685eb1bb0df3d4"),
+    "page_gray": ("dd34b06fa55ad684", "b375390b8a93433e", "300baa355a054487"),
+    "page_colorB": ("d43d0189ca911a16", "72f5f96875cbd533", "6298fbf01e57bf94"),
+    "page_colorP": ("7e4975e4ac19b0fb", "72f5f96875cbd533", "6298fbf01e57bf94"),
+}
+
+
+def test_decode_matches_pinned_digests():
+    """Bit-exact decode over gray, every chroma subsampling in both
+    processes, restart intervals, odd sizes and generator pages. The
+    round-trip tests above bound the error; this pins the pixels."""
+    streams = _golden_streams()
+    assert set(streams) == set(_PINNED)
+    got = {}
+    for name, b in streams.items():
+        g, rgb = decode_gray_jpeg(b), decode_rgb_jpeg(b)
+        got[name] = (
+            _digest(b),
+            _digest(repr(g.shape).encode() + g.tobytes()),
+            _digest(repr(rgb.shape).encode() + rgb.tobytes()),
+        )
+    assert {k: v[0] for k, v in got.items()} == {k: v[0] for k, v in _PINNED.items()}
+    assert got == _PINNED
+    # A spliced restart stream holds the same blocks as one plain scan.
+    assert (decode_gray_jpeg(streams["gray_rst"]) == decode_gray_jpeg(streams["gray"])[:56]).all()
+    assert got["color422B_rst"][2] == got["color422P_rst"][2]
