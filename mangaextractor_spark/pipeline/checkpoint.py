@@ -15,6 +15,17 @@ by idempotent overwrite and (b) one lineage row. A killed run resumes
 by skipping the chunks that have a lineage row, so a chunk that died
 mid-write is simply redone.
 
+A call's remaining chunks commit concurrently, one driver thread per
+chunk up to ``defaultParallelism``, and each OCR chunk's kernel stage
+gets an equal share of the cores as its task budget (at least one
+task). A Python task's fixed cost (about 0.2-0.4 s on 4 local cores),
+not its kernel work, sets a small chunk's wall; this way the remaining
+chunks pay it in about one wave instead of one wave per chunk. So a
+chunk's lineage ``wall_ms`` is its own latency, overlapping the other
+chunks'. A chunk that fails raises once the others have finished; those
+keep their lineage rows, so a resume redoes only the failed chunk. The
+injected ``fail_on_chunk`` commits exactly the chunks before it.
+
 A lineage row's figures cost no extra Spark job: the staged-input
 figures (pages, docs, doc range, input spans) come from one upfront
 groupBy over the chunks still to run, and the output sums are observed
@@ -30,20 +41,21 @@ directories with the same layout.
 
 from __future__ import annotations
 
-import functools
 import json
 import os
 import time
 import uuid
 from collections.abc import Callable, Iterable
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .extract import _well_split, number_spans, ocr_pages
+from .extract import number_spans, ocr_pages
 
 _OCR_COUNTS = ("n_pages", "n_docs", "n_bubbles", "n_empty", "n_failed_pages")
 _MC_COUNTS = ("n_docs", "n_spans", "n_text", "n_image", "n_dropped")
@@ -115,10 +127,11 @@ def _write_chunked(df: DataFrame, key: str, n_chunks: int, path: str) -> None:
 
 
 def _run_chunks(
+    spark: SparkSession,
     out_dir: str,
     status: str,
     chunks: Iterable[int],
-    chunk_output: Callable[[int], DataFrame],
+    make_chunk_output: Callable[[], Callable[[int, int], DataFrame]],
     chunk_dir: Callable[[int], str],
     counts: tuple[str, ...],
     observed: list[Column],
@@ -128,42 +141,69 @@ def _run_chunks(
     staged_figures: tuple[Column, ...] = (),
 ) -> None:
     """Commit every chunk without a ``status`` lineage row: overwrite
-    ``chunk_dir(c)`` with ``chunk_output(c)``, then write the lineage row.
+    ``chunk_dir(c)`` with ``chunk_output(c, tasks)``, then write the
+    lineage row. ``make_chunk_output()`` returns ``chunk_output``; it is
+    called once, on the calling thread, and only if a chunk is to run.
+
+    The chunks commit concurrently, one driver thread each, up to
+    ``defaultParallelism`` at once; ``tasks`` is a chunk's share of the
+    cores, at least one.
 
     A lineage count is the chunk's ``staged_figures`` value plus its
     ``observed`` value of the same name (either may be absent);
     ``doc_id_min``/``doc_id_max`` come from whichever supplies them.
-    ``fail_on_chunk`` injects a failure before that chunk commits."""
+    ``fail_on_chunk`` injects a failure before that chunk commits: the
+    chunks before it (in ``chunks`` order) commit, it and the chunks
+    after it do not. A chunk that fails for real raises once every
+    other chunk has finished, so a resume redoes only the failed
+    chunks."""
     done = completed_chunks(out_dir, status)
     todo = [c for c in chunks if c not in done]
-    figures: dict[int, dict] = {}
-    if todo and staged_figures:
-        figures = {
-            r["chunk"]: r.asDict()
-            for r in staged.filter(F.col("chunk").isin(todo))
-            .groupBy("chunk")
-            .agg(*staged_figures)
-            .collect()
-        }
-    schema = _lineage_schema(counts)
-    lineage = Path(out_dir) / "_lineage"
-    for chunk in todo:
-        if fail_on_chunk == chunk:
-            raise ChunkFailure(f"injected failure before {status} chunk {chunk} committed")
-        t0 = time.monotonic()
-        obs = Observation()
-        chunk_output(chunk).observe(obs, *observed).write.mode("overwrite").parquet(
-            chunk_dir(chunk)
-        )
-        staged_row, out_row = figures.get(chunk, {}), obs.get
-        row = {"run_id": run_id, "chunk": chunk, "status": status}
-        row.update({c: (staged_row.get(c) or 0) + (out_row.get(c) or 0) for c in counts})
-        for c in ("doc_id_min", "doc_id_max"):
-            row[c] = staged_row.get(c) or out_row.get(c) or ""
-        row["wall_ms"] = int((time.monotonic() - t0) * 1000)
-        table = pa.Table.from_pylist([row], schema=schema)
-        lineage.mkdir(parents=True, exist_ok=True)
-        _replace(lineage / f"{status}.{chunk}.{run_id}.parquet", lambda t: pq.write_table(table, t))
+    run = todo[: todo.index(fail_on_chunk)] if fail_on_chunk in todo else todo
+    if run:
+        figures: dict[int, dict] = {}
+        if staged_figures:
+            figures = {
+                r["chunk"]: r.asDict()
+                for r in staged.filter(F.col("chunk").isin(run))
+                .groupBy("chunk")
+                .agg(*staged_figures)
+                .collect()
+            }
+        chunk_output = make_chunk_output()
+        schema = _lineage_schema(counts)
+        lineage = Path(out_dir) / "_lineage"
+        cores = spark.sparkContext.defaultParallelism
+        in_flight = min(len(run), cores)
+        tasks = max(1, cores // in_flight)
+
+        def commit(chunk: int) -> None:
+            t0 = time.monotonic()
+            obs = Observation()
+            chunk_output(chunk, tasks).observe(obs, *observed).write.mode("overwrite").parquet(
+                chunk_dir(chunk)
+            )
+            staged_row, out_row = figures.get(chunk, {}), obs.get
+            row = {"run_id": run_id, "chunk": chunk, "status": status}
+            row.update({c: (staged_row.get(c) or 0) + (out_row.get(c) or 0) for c in counts})
+            for c in ("doc_id_min", "doc_id_max"):
+                row[c] = staged_row.get(c) or out_row.get(c) or ""
+            row["wall_ms"] = int((time.monotonic() - t0) * 1000)
+            table = pa.Table.from_pylist([row], schema=schema)
+            lineage.mkdir(parents=True, exist_ok=True)
+            _replace(
+                lineage / f"{status}.{chunk}.{run_id}.parquet", lambda t: pq.write_table(table, t)
+            )
+
+        # Wrapped once per chunk, so that each commit gets its own copy of
+        # the caller's local properties (job group, tags): the SQL jobs a
+        # commit runs set their execution id in that copy.
+        with ThreadPoolExecutor(in_flight) as pool:
+            futures = [pool.submit(inheritable_thread_target(spark)(commit), c) for c in run]
+        for future in futures:
+            future.result()
+    if len(run) < len(todo):
+        raise ChunkFailure(f"injected failure before {status} chunk {fail_on_chunk} committed")
 
 
 def _doc_range() -> tuple[Column, Column]:
@@ -239,22 +279,27 @@ def run_extraction(
     _stage(out_dir, "_staging_manifest.json", {"n_chunks": n_chunks, "covers": include_covers}, stage)
     pages = spark.read.parquet(pages_dir)
 
-    def chunk_ocr(chunk: int) -> DataFrame:
+    def chunk_ocr(chunk: int, tasks: int) -> DataFrame:
+        # The kernel stage runs ``tasks`` tasks: the pruned scan coalesced
+        # to them (no shuffle), or, when it has fewer splits, the salted
+        # repartition into them.
         chunk_pages = pages.filter(F.col("chunk") == chunk).drop("chunk")
+        direct = chunk_pages.rdd.getNumPartitions() >= tasks
         return ocr_pages(
-            chunk_pages,
+            chunk_pages.coalesce(tasks) if direct else chunk_pages,
             engine=engine,
             furigana=furigana,
             robust=robust,
-            num_partitions=0 if _well_split(chunk_pages) else None,
+            num_partitions=0 if direct else tasks,
         )
 
     is_bubble = F.col("bubble_rank") >= 0
     _run_chunks(
+        spark,
         out_dir,
         "done",
         range(n_chunks),
-        chunk_ocr,
+        lambda: chunk_ocr,
         lambda c: f"{out_dir}/ocr/chunk={c}",
         _OCR_COUNTS,
         [
@@ -277,10 +322,11 @@ def run_extraction(
         capa = spark.read.parquet(capa_dir)
         n_covers = F.count(F.lit(1))  # covers() keeps one row per doc_id
         _run_chunks(
+            spark,
             out_dir,
             "covers_done",
             [-1],
-            lambda _: covers(capa),
+            lambda: lambda *_: covers(capa),
             lambda _: f"{out_dir}/covers",
             _OCR_COUNTS,
             [
@@ -339,18 +385,25 @@ def run_main_content(
         None if input_is_chunked else lambda: _write_chunked(docs, "doc_id", n_chunks, staged_dir),
     )
     staged = docs if input_is_chunked else spark.read.parquet(staged_dir)
-    # The html-chain expression tree costs seconds of py4j construction
-    # and analysis, so the transform plan is built once, on the first
-    # chunk that runs, with the chunk id riding through as a passthrough
-    # column; each chunk only adds a partition filter (pushed down to
-    # the staged scan — pruning is plan-asserted in the tests).
-    spans_all = functools.cache(lambda: main_content_spans_df(staged, passthrough=("chunk",)))
+
+    def chunk_spans() -> Callable[[int, int], DataFrame]:
+        # The html-chain expression tree costs seconds of py4j
+        # construction and analysis, so the transform plan is built once,
+        # before any chunk runs, with the chunk id riding through as a
+        # passthrough column; each chunk only adds a partition filter
+        # (pushed down to the staged scan — pruning is plan-asserted in
+        # the tests). The transform is map-side, so its tasks are the
+        # scan's splits whatever the chunk's share of the cores.
+        spans_all = main_content_spans_df(staged, passthrough=("chunk",))
+        return lambda chunk, _: spans_all.filter(F.col("chunk") == chunk).drop("chunk")
+
     n_spans = F.count(F.lit(1))
     _run_chunks(
+        spark,
         out_dir,
         "mc_done",
         range(n_chunks),
-        lambda c: spans_all().filter(F.col("chunk") == c).drop("chunk"),
+        chunk_spans,
         lambda c: f"{out_dir}/spans/chunk={c}",
         _MC_COUNTS,
         [

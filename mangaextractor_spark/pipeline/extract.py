@@ -133,8 +133,8 @@ def ocr_pages(
     under-split — e.g. pages exploded from per-doc arrays, or a scan
     with fewer splits than cores. ``num_partitions``: 0 = map directly
     (no repartition), None = salted repartition into 3x parallelism,
-    N = into N partitions. ``extract_spans`` and the chunk runner pick
-    automatically with ``_well_split``.
+    N = into N partitions. ``extract_spans`` picks automatically with
+    ``_well_split``; the chunk runner picks from a chunk's task budget.
     """
     if num_partitions == 0:
         return pages.mapInPandas(_kernel(engine, furigana, robust), OCR_SCHEMA)

@@ -223,3 +223,120 @@ def test_covers_resume_from_staging(spark, tmp_path):
     lineage = spark.read.parquet(f"{out}/_lineage")
     assert lineage.filter("status = 'covers_done'").count() == 1
     assert lineage.count() == N_CHUNKS + 1
+
+
+def test_real_chunk_failure_redoes_only_that_chunk(spark, tmp_path):
+    """A chunk whose write fails for real raises once the chunks
+    committing beside it have finished: they keep their lineage rows,
+    the failed chunk has none, and a rerun commits only that chunk,
+    giving a clean run's output."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from mangaextractor_spark.pipeline.checkpoint import _run_chunks
+
+    staged = spark.range(40).withColumn("chunk", (F.col("id") % N_CHUNKS).cast("int"))
+    bad = 2
+
+    def run(out: str, run_id: str, fail: bool) -> None:
+        def chunk_rows(chunk: int, _tasks: int):
+            rows = staged.filter(F.col("chunk") == chunk).drop("chunk")
+            if fail and chunk == bad:
+                boom = F.raise_error(F.lit(f"chunk {bad} failed"))
+                rows = rows.withColumn("id", F.when(F.col("id") >= 0, boom).otherwise(F.col("id")))
+            return rows
+
+        _run_chunks(
+            spark, out, "done", range(N_CHUNKS), lambda: chunk_rows,
+            lambda c: f"{out}/rows/chunk={c}", ("n_rows",),
+            [F.count(F.lit(1)).alias("n_rows")], run_id, None,
+        )
+
+    def lineage(out: str) -> list[dict]:
+        return pq.read_table(f"{out}/_lineage").to_pylist()
+
+    out = str(tmp_path / "out")
+    with pytest.raises(Exception, match=f"chunk {bad} failed"):
+        run(out, "first", fail=True)
+    rows = lineage(out)
+    assert sorted(r["chunk"] for r in rows) == [c for c in range(N_CHUNKS) if c != bad]
+    assert all(r["status"] == "done" and r["n_rows"] == 10 for r in rows)
+
+    run(out, "rerun", fail=False)
+    assert [r["chunk"] for r in lineage(out) if r["run_id"] == "rerun"] == [bad]
+    assert completed_chunks(out, "done") == set(range(N_CHUNKS))
+
+    clean = str(tmp_path / "clean")
+    run(clean, "clean", fail=False)
+    got, exp = (sorted(spark.read.parquet(f"{d}/rows").collect()) for d in (out, clean))
+    assert got == exp and len(got) == 40
+
+
+def test_chunk_jobs_inherit_the_callers_job_group(spark, corpus_dfs, tmp_path):
+    """The chunk commits run on driver threads; their jobs must still
+    carry the caller's job group (tools that filter jobs by group, such
+    as a traced benchmark, rely on it), without PySpark's warning that
+    tags will not be inherited."""
+    import warnings
+
+    docs, media = corpus_dfs
+    out = str(tmp_path / "out")
+    with pytest.raises(ChunkFailure):
+        run_extraction(spark, docs, media, out, n_chunks=N_CHUNKS, fail_on_chunk=1)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup())
+    sc.setJobGroup("g", "resumed run")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            run_extraction(spark, docs, media, out, n_chunks=N_CHUNKS)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert not [w for w in caught if "will not be inherited" in str(w.message)]
+    assert set(tracker.getJobIdsForGroup()) == ungrouped, "a job ran outside the caller's group"
+    assert len(tracker.getJobIdsForGroup("g")) >= N_CHUNKS - 1  # a write per resumed chunk
+
+
+def test_kernel_stage_is_sized_by_the_chunks_in_flight(spark, corpus_dfs, tmp_path, monkeypatch):
+    """An OCR chunk's kernel stage runs the cores divided by the chunks
+    in flight (at least one task): over the coalesced chunk scan, or,
+    when that scan has fewer splits, through the salted repartition."""
+    import shutil
+
+    from mangaextractor_spark.pipeline import checkpoint
+
+    docs, media = corpus_dfs
+    cores = spark.sparkContext.defaultParallelism
+    stages = []  # (kernel-stage partitions, ocr_pages' num_partitions: 0 = no shuffle)
+    real = checkpoint.ocr_pages
+
+    def spy(pages, **kw):
+        ocr = real(pages, **kw)
+        stages.append((ocr.rdd.getNumPartitions(), kw["num_partitions"]))
+        return ocr
+
+    monkeypatch.setattr(checkpoint, "ocr_pages", spy)
+
+    run_extraction(spark, docs, media, str(tmp_path / "all"), n_chunks=cores)
+    assert stages == [(1, 0)] * cores
+
+    killed = str(tmp_path / "killed")
+    with pytest.raises(ChunkFailure):
+        run_extraction(spark, docs, media, killed, n_chunks=N_CHUNKS, fail_on_chunk=N_CHUNKS - 1)
+    shutil.copytree(killed, str(tmp_path / "one_split"))
+    stages.clear()
+    run_extraction(spark, docs, media, killed, n_chunks=N_CHUNKS)
+    assert [n for n, _ in stages] == [cores]
+
+    # Pack the last chunk's staged files into one split: fewer than its budget.
+    stages.clear()
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1g")
+    spark.conf.set("spark.sql.files.minPartitionNum", "1")
+    try:
+        run_extraction(spark, docs, media, str(tmp_path / "one_split"), n_chunks=N_CHUNKS)
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "16m")
+        spark.conf.unset("spark.sql.files.minPartitionNum")
+    assert stages == [(cores, cores)]
