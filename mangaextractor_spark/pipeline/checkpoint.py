@@ -16,15 +16,17 @@ by skipping the chunks that have a lineage row, so a chunk that died
 mid-write is simply redone.
 
 A call's remaining chunks commit concurrently, one driver thread per
-chunk up to ``defaultParallelism``, and each OCR chunk's kernel stage
-gets an equal share of the cores as its task budget (at least one
-task). A Python task's fixed cost (about 0.2-0.4 s on 4 local cores),
-not its kernel work, sets a small chunk's wall; this way the remaining
-chunks pay it in about one wave instead of one wave per chunk. So a
-chunk's lineage ``wall_ms`` is its own latency, overlapping the other
-chunks'. A chunk that fails raises once the others have finished; those
-keep their lineage rows, so a resume redoes only the failed chunk. The
-injected ``fail_on_chunk`` commits exactly the chunks before it.
+chunk up to ``defaultParallelism``. Each OCR chunk's kernel stage gets
+a task budget: its share of the cores (at least one task), or one task
+per ``PAGES_PER_TASK`` staged pages if that is more. A Python task's
+fixed cost (about 0.2-0.4 s on 4 local cores), not its kernel work,
+sets a small chunk's wall; this way small remaining chunks pay it in
+about one wave instead of one wave per chunk, and a large chunk keeps
+up to one task per split of its scan. So a chunk's lineage ``wall_ms``
+is its own latency, overlapping the other chunks'. A chunk that fails
+raises once the others have finished; those keep their lineage rows,
+so a resume redoes only the failed chunk. The injected
+``fail_on_chunk`` commits exactly the chunks before it.
 
 A lineage row's figures cost no extra Spark job: the staged-input
 figures (pages, docs, doc range, input spans) come from one upfront
@@ -41,6 +43,7 @@ directories with the same layout.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -59,6 +62,11 @@ from .extract import number_spans, ocr_pages
 
 _OCR_COUNTS = ("n_pages", "n_docs", "n_bubbles", "n_empty", "n_failed_pages")
 _MC_COUNTS = ("n_docs", "n_spans", "n_text", "n_image", "n_dropped")
+# Staged pages that earn an OCR chunk a kernel task beyond its share of
+# the cores: about 0.25 s of clean-page kernel work (~4 ms a page on
+# 4 vCPUs), the order of a Python task's fixed cost (0.2-0.4 s). A chunk
+# with fewer pages per task would spend its tasks mostly on that cost.
+PAGES_PER_TASK = 64
 
 
 class ChunkFailure(RuntimeError):
@@ -131,7 +139,7 @@ def _run_chunks(
     out_dir: str,
     status: str,
     chunks: Iterable[int],
-    make_chunk_output: Callable[[], Callable[[int, int], DataFrame]],
+    chunk_output: Callable[[int, int], DataFrame],
     chunk_dir: Callable[[int], str],
     counts: tuple[str, ...],
     observed: list[Column],
@@ -142,12 +150,14 @@ def _run_chunks(
 ) -> None:
     """Commit every chunk without a ``status`` lineage row: overwrite
     ``chunk_dir(c)`` with ``chunk_output(c, tasks)``, then write the
-    lineage row. ``make_chunk_output()`` returns ``chunk_output``; it is
-    called once, on the calling thread, and only if a chunk is to run.
+    lineage row. Every chunk's output is built on the calling thread
+    before any chunk runs.
 
     The chunks commit concurrently, one driver thread each, up to
-    ``defaultParallelism`` at once; ``tasks`` is a chunk's share of the
-    cores, at least one.
+    ``defaultParallelism`` at once. ``tasks`` is a chunk's kernel-task
+    budget: its share of the cores (at least one; the first chunks get
+    the remainder), or one task per ``PAGES_PER_TASK`` staged pages
+    (``n_pages`` in ``staged_figures``) if that is more.
 
     A lineage count is the chunk's ``staged_figures`` value plus its
     ``observed`` value of the same name (either may be absent);
@@ -170,19 +180,22 @@ def _run_chunks(
                 .agg(*staged_figures)
                 .collect()
             }
-        chunk_output = make_chunk_output()
-        schema = _lineage_schema(counts)
-        lineage = Path(out_dir) / "_lineage"
         cores = spark.sparkContext.defaultParallelism
         in_flight = min(len(run), cores)
-        tasks = max(1, cores // in_flight)
+        share, spare = divmod(cores, in_flight)
+
+        def budget(i: int, chunk: int) -> int:
+            pages = figures.get(chunk, {}).get("n_pages") or 0
+            return max(share + (i < spare), -(-pages // PAGES_PER_TASK))
+
+        outputs = {c: chunk_output(c, budget(i, c)) for i, c in enumerate(run)}
+        schema = _lineage_schema(counts)
+        lineage = Path(out_dir) / "_lineage"
 
         def commit(chunk: int) -> None:
             t0 = time.monotonic()
             obs = Observation()
-            chunk_output(chunk, tasks).observe(obs, *observed).write.mode("overwrite").parquet(
-                chunk_dir(chunk)
-            )
+            outputs[chunk].observe(obs, *observed).write.mode("overwrite").parquet(chunk_dir(chunk))
             staged_row, out_row = figures.get(chunk, {}), obs.get
             row = {"run_id": run_id, "chunk": chunk, "status": status}
             row.update({c: (staged_row.get(c) or 0) + (out_row.get(c) or 0) for c in counts})
@@ -280,17 +293,22 @@ def run_extraction(
     pages = spark.read.parquet(pages_dir)
 
     def chunk_ocr(chunk: int, tasks: int) -> DataFrame:
-        # The kernel stage runs ``tasks`` tasks: the pruned scan coalesced
-        # to them (no shuffle), or, when it has fewer splits, the salted
-        # repartition into them.
+        # A scan with at least ``tasks`` splits, or with as many as the
+        # cores (extract_spans' test), maps the kernel straight over
+        # itself, coalesced to at most ``tasks`` (no shuffle). An
+        # under-split scan takes the salted repartition: into 3x the
+        # cores, as in extract_spans, when its budget spans them all (a
+        # chunk left alone); into its budget when it shares the cores,
+        # whose other chunks' tasks fill in around its skew.
+        cores = spark.sparkContext.defaultParallelism
         chunk_pages = pages.filter(F.col("chunk") == chunk).drop("chunk")
-        direct = chunk_pages.rdd.getNumPartitions() >= tasks
+        direct = chunk_pages.rdd.getNumPartitions() >= min(tasks, cores)
         return ocr_pages(
             chunk_pages.coalesce(tasks) if direct else chunk_pages,
             engine=engine,
             furigana=furigana,
             robust=robust,
-            num_partitions=0 if direct else tasks,
+            num_partitions=0 if direct else None if tasks >= cores else tasks,
         )
 
     is_bubble = F.col("bubble_rank") >= 0
@@ -299,7 +317,7 @@ def run_extraction(
         out_dir,
         "done",
         range(n_chunks),
-        lambda: chunk_ocr,
+        chunk_ocr,
         lambda c: f"{out_dir}/ocr/chunk={c}",
         _OCR_COUNTS,
         [
@@ -326,7 +344,7 @@ def run_extraction(
             out_dir,
             "covers_done",
             [-1],
-            lambda: lambda *_: covers(capa),
+            lambda *_: covers(capa),
             lambda _: f"{out_dir}/covers",
             _OCR_COUNTS,
             [
@@ -385,25 +403,21 @@ def run_main_content(
         None if input_is_chunked else lambda: _write_chunked(docs, "doc_id", n_chunks, staged_dir),
     )
     staged = docs if input_is_chunked else spark.read.parquet(staged_dir)
-
-    def chunk_spans() -> Callable[[int, int], DataFrame]:
-        # The html-chain expression tree costs seconds of py4j
-        # construction and analysis, so the transform plan is built once,
-        # before any chunk runs, with the chunk id riding through as a
-        # passthrough column; each chunk only adds a partition filter
-        # (pushed down to the staged scan — pruning is plan-asserted in
-        # the tests). The transform is map-side, so its tasks are the
-        # scan's splits whatever the chunk's share of the cores.
-        spans_all = main_content_spans_df(staged, passthrough=("chunk",))
-        return lambda chunk, _: spans_all.filter(F.col("chunk") == chunk).drop("chunk")
-
+    # The html-chain expression tree costs seconds of py4j construction
+    # and analysis, so the transform plan is built once, on the first
+    # chunk that runs, with the chunk id riding through as a passthrough
+    # column; each chunk only adds a partition filter (pushed down to
+    # the staged scan — pruning is plan-asserted in the tests). The
+    # transform is map-side, so its tasks are the scan's splits whatever
+    # the chunk's task budget.
+    spans_all = functools.cache(lambda: main_content_spans_df(staged, passthrough=("chunk",)))
     n_spans = F.count(F.lit(1))
     _run_chunks(
         spark,
         out_dir,
         "mc_done",
         range(n_chunks),
-        chunk_spans,
+        lambda c, _: spans_all().filter(F.col("chunk") == c).drop("chunk"),
         lambda c: f"{out_dir}/spans/chunk={c}",
         _MC_COUNTS,
         [

@@ -26,13 +26,12 @@ ARROW_MAX_RECORDS_PER_BATCH = 64
 
 def driver_memory(physical_bytes: int) -> str:
     """The default ``spark.driver.memory``: a sixth of the host's RAM,
-    clamped to 1-8 GB. Local mode is driver-only, so the heap holds
-    cache, shuffle and Arrow buffers for all cores; undersizing it turns
-    32-way runs into GC thrash (measured: 530 -> 1538 pages/s going
-    8g -> 48g on a large host, where ``SPARK_DRIVER_MEM`` raises it).
-    A fixed large default would instead ask for more than a small host
-    has."""
-    return f"{max(1, min(8, physical_bytes // (6 * 2**30)))}g"
+    at least 1 GB and at most 48 GB. Local mode is driver-only, so the
+    heap holds cache, shuffle and Arrow buffers for all cores;
+    undersizing it turns 32-way runs into GC thrash (measured: 530 ->
+    1538 pages/s going 8g -> 48g on a large host). A fixed 48g would
+    instead ask a small host for more than it has."""
+    return f"{max(1, min(48, physical_bytes // (6 * 2**30)))}g"
 
 
 def get_spark(

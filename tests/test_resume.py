@@ -6,6 +6,8 @@ the reference's `concluido/` move + is_processado flags
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 
 from mangaextractor_spark.fixtures.generator import CorpusSpec, generate_corpus
@@ -247,7 +249,7 @@ def test_real_chunk_failure_redoes_only_that_chunk(spark, tmp_path):
             return rows
 
         _run_chunks(
-            spark, out, "done", range(N_CHUNKS), lambda: chunk_rows,
+            spark, out, "done", range(N_CHUNKS), chunk_rows,
             lambda c: f"{out}/rows/chunk={c}", ("n_rows",),
             [F.count(F.lit(1)).alias("n_rows")], run_id, None,
         )
@@ -295,15 +297,34 @@ def test_chunk_jobs_inherit_the_callers_job_group(spark, corpus_dfs, tmp_path):
         for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
     assert not [w for w in caught if "will not be inherited" in str(w.message)]
-    assert set(tracker.getJobIdsForGroup()) == ungrouped, "a job ran outside the caller's group"
+    # Only new ungrouped ids count: the status store drops its oldest jobs
+    # once it holds spark.ui.retainedJobs of them.
+    assert not set(tracker.getJobIdsForGroup()) - ungrouped, "a job ran outside the caller's group"
     assert len(tracker.getJobIdsForGroup("g")) >= N_CHUNKS - 1  # a write per resumed chunk
 
 
+@contextlib.contextmanager
+def _sql_conf(spark, **settings):
+    old = {key: spark.conf.get(key, None) for key in settings}
+    for key, value in settings.items():
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        for key, value in old.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+
+
 def test_kernel_stage_is_sized_by_the_chunks_in_flight(spark, corpus_dfs, tmp_path, monkeypatch):
-    """An OCR chunk's kernel stage runs the cores divided by the chunks
-    in flight (at least one task): over the coalesced chunk scan, or,
-    when that scan has fewer splits, through the salted repartition."""
-    import shutil
+    """An OCR chunk's kernel-task budget is its share of the cores (the
+    first chunks get the remainder), or one task per PAGES_PER_TASK
+    staged pages if that is more. A scan with enough splits maps the
+    kernel over itself, coalesced to the budget; an under-split scan
+    takes the salted repartition, into 3x the cores for a lone chunk."""
+    import pyarrow.parquet as pq
 
     from mangaextractor_spark.pipeline import checkpoint
 
@@ -317,26 +338,37 @@ def test_kernel_stage_is_sized_by_the_chunks_in_flight(spark, corpus_dfs, tmp_pa
         stages.append((ocr.rdd.getNumPartitions(), kw["num_partitions"]))
         return ocr
 
+    def resume(name: str, kill: int) -> list:
+        out = str(tmp_path / name)
+        with pytest.raises(ChunkFailure):
+            run_extraction(spark, docs, media, out, n_chunks=N_CHUNKS, fail_on_chunk=kill)
+        stages.clear()
+        run_extraction(spark, docs, media, out, n_chunks=N_CHUNKS)
+        return list(stages)
+
     monkeypatch.setattr(checkpoint, "ocr_pages", spy)
+    assert N_CHUNKS == cores
 
-    run_extraction(spark, docs, media, str(tmp_path / "all"), n_chunks=cores)
-    assert stages == [(1, 0)] * cores
+    run_extraction(spark, docs, media, str(tmp_path / "all"), n_chunks=N_CHUNKS)
+    assert stages == [(1, 0)] * N_CHUNKS
+    # Three chunks on four cores: the first takes the spare core.
+    assert [n for n, _ in resume("three", 1)] == [2, 1, 1]
 
-    killed = str(tmp_path / "killed")
-    with pytest.raises(ChunkFailure):
-        run_extraction(spark, docs, media, killed, n_chunks=N_CHUNKS, fail_on_chunk=N_CHUNKS - 1)
-    shutil.copytree(killed, str(tmp_path / "one_split"))
-    stages.clear()
-    run_extraction(spark, docs, media, killed, n_chunks=N_CHUNKS)
-    assert [n for n, _ in stages] == [cores]
+    # A lone chunk packed into one split: the salted repartition, 3x the cores.
+    one_split = {
+        "spark.sql.files.maxPartitionBytes": "1g",
+        "spark.sql.files.openCostInBytes": "0",
+        "spark.sql.files.minPartitionNum": "1",
+    }
+    with _sql_conf(spark, **one_split):
+        assert resume("lone_packed", N_CHUNKS - 1) == [(3 * cores, None)]
 
-    # Pack the last chunk's staged files into one split: fewer than its budget.
-    stages.clear()
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "1g")
-    spark.conf.set("spark.sql.files.minPartitionNum", "1")
-    try:
-        run_extraction(spark, docs, media, str(tmp_path / "one_split"), n_chunks=N_CHUNKS)
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "16m")
-        spark.conf.unset("spark.sql.files.minPartitionNum")
-    assert stages == [(cores, cores)]
+    # Chunk scans of many splits map straight over them, never past the budget.
+    with _sql_conf(spark, **{"spark.sql.files.maxPartitionBytes": "16k"}):
+        assert resume("lone_split", N_CHUNKS - 1) == [(cores, 0)]
+        monkeypatch.setattr(checkpoint, "PAGES_PER_TASK", 4)
+        by_pages = resume("by_pages", 0)
+    rows = pq.read_table(str(tmp_path / "by_pages" / "_lineage")).to_pylist()
+    pages = [r["n_pages"] for r in sorted(rows, key=lambda r: r["chunk"])]
+    assert min(pages) > 4  # every chunk's page floor is above its share of one core
+    assert by_pages == [(-(-n // 4), 0) for n in pages]

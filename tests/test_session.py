@@ -17,7 +17,8 @@ GB = 2**30
         (16_000_000_000, "2g"),
         (31 * GB, "5g"),
         (48 * GB, "8g"),
-        (1024 * GB, "8g"),  # clamped down
+        (288 * GB, "48g"),
+        (1024 * GB, "48g"),  # clamped down
     ],
 )
 def test_driver_memory_is_a_sixth_of_ram_clamped(physical, heap):
