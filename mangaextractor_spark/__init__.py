@@ -12,8 +12,8 @@ Spark-first:
 - relational surface: plain DataFrame/Catalyst (filters, joins,
   windows, dedup, group stats) mirroring the reference's persistence
   SQL (``/root/reference/src/manga_extractor/database/db_util.py``)
-- training-data ops: dedup (exact/minhash/simhash/jaccard), similarity
-  search, text quality/langid/tokens, multimodal plumbing.
+- training-data ops: dedup (exact/minhash/simhash/jaccard), text
+  quality/langid/tokens, multimodal plumbing.
 
 No code is copied from the reference; behavior citations live in each
 module's docstrings as ``reference file:line``.

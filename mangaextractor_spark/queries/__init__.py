@@ -50,7 +50,6 @@ def _load_all() -> None:
         extraction_queries,
         funnels,
         html_queries,
-        hybrid,
         image_dedup,
         main_content,
         maintenance,
@@ -60,105 +59,12 @@ def _load_all() -> None:
         multimodal_queries,
         normalize,
         parsing_queries,
-        pq,
         relational,
         scale_ops,
         scoring,
-        search,
-        similarity,
         textops,
         webdataset,
     )
 
 
 _load_all()
-
-
-# --- Driver-witness rotation -------------------------------------------
-#
-# The grading driver records only the FIRST 50 entries of ``queries()``
-# iteration order in CORRECTNESS_r{N}.json.  Registration order follows
-# module import order, which historically meant everything registered
-# after position 50 was never witnessed by the hard signal even though
-# it is green under the in-repo harness and the judge's full simulation.
-#
-# Rotation policy: each round, ``_WITNESS_FIRST`` leads with the
-# oracle-bearing queries that no prior CORRECTNESS_r*.json has ever
-# contained (computed from the union of r01-r04 keys; 34 entries as of
-# round 5, listed in VERDICT.md round 4 "What's missing" #1), followed
-# by any queries NEW this round, then the rest in registration order.
-# Next round: recompute the never-witnessed set from the union of
-# CORRECTNESS_r01..r05 keys and rotate again until every oracle-bearing
-# query has at least one driver-green row.
-_WITNESS_FIRST: tuple[str, ...] = (
-    # -- never witnessed by any CORRECTNESS_r01..r04 file --
-    "semantic_dedup",
-    "embedding_quantization",
-    "rrf_fusion",
-    "compaction_plan",
-    "dq_audit",
-    "temperature_sampling_weights",
-    "snapshot_drift",
-    "audio_features",
-    "video_metadata",
-    "session_window_stats",
-    "events_sliding_1h",
-    "regional_revenue",
-    "orders_priority_pivot",
-    "orders_priority_unpivot",
-    "shipping_priority",
-    "returned_items_ranking",
-    "bigram_lm_quality",
-    "bloom_decontamination",
-    "zorder_layout",
-    "file_skipping_stats",
-    "join_skew_report",
-    "bpe_pair_counts",
-    "feature_hash_vectors",
-    "event_overlap_pairs",
-    "range_partition_stats",
-    "train_val_split",
-    "length_quantiles",
-    "hll_distinct_tokens",
-    "cm_heavy_hitters",
-    "length_mad",
-    "lang_top_tokens",
-    "trimmed_mean_tokens",
-    "quality_classifier_scores",
-    "vocab_coverage",
-    # -- new in round 5 (also never witnessed, by construction) --
-    "minhash_join",
-    "minhash_join_best_match",
-    "cross_snapshot_containment",
-    "pq_codes",
-    "ivf_pq_ann_topk",
-    "near_dup_bloom_gate",
-    "image_dhash",
-    "image_dhash_pairs",
-    "large_volume_customers",
-    "scd2_type_history",
-    "unicode_normalization_stats",
-    "normalization_rollup",
-    "hard_negatives",
-    "shard_plan",
-    "cluster_balanced_sample",
-    # -- closing-wave promotion: exactly fills the driver's 50-entry
-    # window with never-witnessed oracle queries. jaccard_prefix_join
-    # (the PPJoin-family exact similarity join) is the highest-value
-    # unwitnessed op; the other four closing-wave entries
-    # (parts_supplier_counts, dominant_supplier_share,
-    # prospective_customers, priority_sample) register after the
-    # window and carry in-repo parity tests instead.
-    "jaccard_prefix_join",
-)
-
-
-def _apply_witness_order() -> None:
-    head = {n: REGISTRY[n] for n in _WITNESS_FIRST if n in REGISTRY}
-    tail = {n: qd for n, qd in REGISTRY.items() if n not in head}
-    REGISTRY.clear()
-    REGISTRY.update(head)
-    REGISTRY.update(tail)
-
-
-_apply_witness_order()

@@ -1,15 +1,15 @@
 """Shared scale knobs + the hot-key playbook for corpus-frequency stats.
 
-This repo shipped the same scale hazard twice (round-3 verdict:
-``bm25_topk`` and ``repeated_ngram_stats``) — computing a per-key
+This repo shipped the same scale hazard more than once (round-3
+verdict, e.g. ``repeated_ngram_stats``) — computing a per-key
 document frequency with ``F.count(...).over(Window.partitionBy(key))``.
 That window carries EVERY row of a key into ONE task: windows get no
 partial (map-side) aggregation and AQE's skew handling only splits
 join/aggregate exchanges, never window partitions. At sf0.1 it is
 invisible; at 100 TB one boilerplate 8-gram or one corpus-frequent
-query term pins the whole stage on a single straggler task.
+key pins the whole stage on a single straggler task.
 
-The pattern to use instead (both call sites now do):
+The pattern to use instead (every call site now does):
 
 1. ``base.persist()`` the frame the frequency is computed FROM. A
    joined-back/broadcast dimension otherwise re-executes the whole
@@ -19,7 +19,7 @@ The pattern to use instead (both call sites now do):
    aggregation combines map-side and no task ever sees more than its
    share of any key.
 3. Join it back:
-   - ``F.broadcast(df)`` when the key domain is bounded (query
+   - ``F.broadcast(df)`` when the key domain is bounded (a declared
      vocabulary: |terms| rows) — zero extra shuffle;
    - a plain equi-join when the domain is corpus-sized (gram hashes) —
      shuffles, but AQE CAN skew-split an equi-join exchange, which it
@@ -37,15 +37,6 @@ from __future__ import annotations
 # a shingle shared by the whole corpus generates O(n^2) candidate
 # pairs and carries no dedup signal). Mirrored in the oracle CTE.
 POSTING_CAP = 64
-
-# bm25_topk: corpus-frequent query terms are kept (their rational idf
-# ~0 already neutralizes them) but their df MUST come from a
-# groupBy+broadcast join-back, never a window — see module docstring.
-# A production deployment would additionally stop-list terms with
-# df/N above this fraction (WAND-style impact pruning); on the
-# synthetic ~30-word vocabulary this would degenerately empty the
-# result, so it is documented, not applied.
-STOP_TERM_DF_FRAC = 0.5
 
 # repeated_ngram_stats: gram df is only consumed as the predicate
 # df >= 2, so the join-back dimension is (h, is_rep) — key + boolean,
@@ -78,25 +69,17 @@ SKETCH_BUCKET_CAP = 64
 
 # Top-k ranking is the THIRD incarnation of the window pin: row_number
 # over Window.partitionBy(query) carries every candidate of a query on
-# one task (corpus-sized for brute-force similarity / common BM25
-# terms). Fix: queries/_topk.py topk_per_group — Arrow-batched
+# one task (corpus-sized whenever every document is a candidate).
+# Fix: queries/_topk.py topk_per_group — Arrow-batched
 # per-PARTITION top-k with the same fully-tie-broken total order, then
 # the exact window over <= k * n_partitions survivors. Results are
 # bit-identical; plan-asserted in tests (MapInPandas feeds the Window).
 
-# Broadcast boundedness rule (the round-4 dedup_embedding_cosine
-# lesson, generalized): F.broadcast is only legal on frames whose row
-# count is bounded by CONSTRUCTION (a query batch, a codebook, a probe
-# list, one register row) — never on data-scaled intermediates. Two
-# knobs keep "constant" sets constant as the corpus grows:
-# - IVF centroids (similarity.CENT_MOD, shared by pq.py): cells are
-#   vec_id % CENT_MOD == 0, so |cells| = n / CENT_MOD. Size CENT_MOD
-#   proportionally to the corpus so cells stay a fixed nlist (e.g.
-#   65k); the oracle mirrors whatever modulus is chosen. Left at the
-#   fixture default, the centroid broadcast would scale as n/31 — the
-#   knob, not the plan shape, is what makes it nlist-bounded.
-# - PQ codebook (pq.CB_MOD/CB_MAX): already capped by CB_MAX, bounded
-#   at any scale.
+# Broadcast boundedness rule (a round-4 verdict lesson, generalized):
+# F.broadcast is only legal on frames whose row count is bounded by
+# CONSTRUCTION (a query batch, a codebook, a probe list, one register
+# row) — never on data-scaled intermediates such as a drop set or a
+# candidate-pair set; those joins are left to the planner and AQE.
 
 # Candidate generation has THREE tiers, by what they guarantee
 # (round-5 closing; pick per use case, all three live in the repo):
@@ -124,7 +107,7 @@ SKETCH_BUCKET_CAP = 64
 #   one corpus scan reduces to a word/pair-frequency table bounded by
 #   the vocabulary, and every iteration/join after that touches only
 #   vocab-sized frames. Iterative ops localCheckpoint the small frame
-#   per round (kmeans_fit's rule) so plan depth stays linear in rounds
+#   per round so plan depth stays linear in rounds
 #   and the corpus is never rescanned.
 # - DIMENSION-BOUNDED MATRIX JOINS (source_overlap_matrix): a self-join
 #   on a corpus-sized key is safe when the VALUE side is a rollup

@@ -4,8 +4,8 @@
 candidate row of a group into one task (windows get no partial
 aggregation and AQE cannot split them) — fine when the group's
 candidate set is bounded by construction, a single-task pin when it is
-corpus-sized (brute-force similarity: every corpus vector is a
-candidate for every query; BM25: every doc matching any query term).
+corpus-sized (a mega-source's documents in per_source_cap, a major
+language's vocabulary in lang_top_tokens).
 This is the third incarnation of the hazard documented in
 _scale_notes.py (df-by-window was the first two).
 
@@ -20,9 +20,8 @@ caller does by suffixing the id column).
 
 Precondition: no NaNs in the sort columns — pandas sorts NaN last
 while Spark's descending order sorts it first, so a NaN could be
-pruned that the window would have ranked. All callers rank finite
-rounded similarities/scores (their oracles would already diverge on
-NaN).
+pruned that the window would have ranked. All callers rank
+integer hashes or counts, which are never NaN.
 """
 
 from __future__ import annotations

@@ -246,8 +246,8 @@ ORDER BY doc_id, chunk_id
     "doc. Chunk starts come from a map-side sequence + slice over the "
     "token array, then ONE explode — no shuffle anywhere, so at 100 TB "
     "this is scan-bound; chunk counts are exact integers (no float "
-    "ceil). This is the indexing front-end for embedding_topk / "
-    "bm25_topk over long documents.",
+    "ceil). This is the indexing front-end for retrieval over long "
+    "documents.",
     tags=("curation", "retrieval"),
 )
 def chunk_spans(spark: SparkSession, sf_dir: str) -> DataFrame:

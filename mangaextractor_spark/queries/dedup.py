@@ -3,7 +3,7 @@
 The reference's only dedup is page identity ``(id_capitulo, nome,
 hash_pagina)`` (reference database/db_util.py:59, Q8); a 100 TB corpus
 engine needs the full ladder: exact hash, n-gram Jaccard, MinHash+LSH,
-SimHash (plus embedding-cosine near-dup in queries/similarity.py).
+SimHash.
 
 Scale design: every per-document sketch (fingerprint, MinHash
 signature, SimHash) is computed **map-side** with array higher-order
@@ -773,11 +773,11 @@ def scrub_repeated_ngrams(d: DataFrame) -> DataFrame:
     "MinHash-LSH candidate generation, connected-component clustering "
     "and keep-min-doc-per-cluster. Spark side: the drop list is only "
     "the non-keeper members of multi-doc clusters — a set orders of "
-    "magnitude smaller than the corpus (it is bounded by the number of "
-    "near-duplicate docs), so the final filter is a BROADCAST left-anti "
-    "join: the 100 TB corpus is scanned ONCE with the drop set hashed "
-    "on every executor, zero corpus-side shuffle. Oracle: recursive-CTE "
-    "closure, drops = nodes whose min-reachable id is not themselves, "
+    "magnitude smaller than the corpus, but still bounded only by the "
+    "number of near-duplicate docs, so the final left-anti join carries "
+    "no broadcast hint: the planner and AQE broadcast the drop set when "
+    "its measured size allows and shuffle it when it does not. "
+    "Oracle: recursive-CTE closure, drops = nodes whose min-reachable id is not themselves, "
     "anti-join via LEFT JOIN ... IS NULL.",
     tags=("dedup", "pipeline"),
 )
@@ -787,7 +787,7 @@ def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels, _ = connected_components(pairs)
     drops = labels.filter(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
     return (
-        d.join(F.broadcast(drops), "doc_id", "left_anti")
+        d.join(drops, "doc_id", "left_anti")
         .select("doc_id", "lang", "n_chars")
         .orderBy("doc_id")
     )
@@ -907,7 +907,7 @@ _PR_SQL = (
     "(both AQE-skew-splittable; a hot node is a hot JOIN key, never a "
     "window pin); the rank frame is localCheckpoint'ed per round so "
     "plans stay linear in iterations (same discipline as "
-    "connected_components and kmeans_fit).",
+    "connected_components).",
     tags=("dedup", "graph", "iterative"),
 )
 def near_dup_pagerank(spark: SparkSession, sf_dir: str, iters: int = PR_ITERS) -> DataFrame:
@@ -1089,10 +1089,11 @@ _FUNNEL_LADDER_SQL = (
     "before committing to the full rewrite. Scale shape: one corpus "
     "scan persisted (it feeds the keeper election AND the flag join); "
     "keeper election is groupBy + equi-join back (never a window over "
-    "the hash); the near-dup drop set — bounded by the number of "
-    "near-duplicate docs, orders of magnitude below the corpus — rides "
-    "a BROADCAST left join; the rollup is a 5-row map-side-combined "
-    "groupBy. Oracle: recursive-CTE closure over the same LSH CTE.",
+    "the hash); the near-dup drop set — bounded only by the number of "
+    "near-duplicate docs — joins with no broadcast hint (the planner "
+    "and AQE pick the strategy from its size); the rollup is a 5-row "
+    "map-side-combined groupBy. Oracle: recursive-CTE closure over the "
+    "same LSH CTE.",
     tags=("dedup", "pipeline"),
 )
 def dedup_ladder_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1108,7 +1109,7 @@ def dedup_ladder_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     flags = (
         d.join(keep, "h")
-        .join(F.broadcast(drops), "doc_id", "left")
+        .join(drops, "doc_id", "left")
         .select(
             "lang",
             (F.col("doc_id") == F.col("keeper")).alias("is_exact_keeper"),
@@ -1415,8 +1416,8 @@ ORDER BY a_id, b_id
     "cross-multiplication (3c >= na+nb <=> J >= 1/2); jaccard is one "
     "double division rounded 6dp at output. Scale: df via one "
     "map-side-combined groupBy on the persisted shingle rows (the "
-    "bm25 pattern — never broadcast, the shingle vocabulary is "
-    "corpus-sized); per-doc prefix = array_sort + slice, map-side; "
+    "_scale_notes.py pattern — never broadcast, the shingle vocabulary "
+    "is corpus-sized); per-doc prefix = array_sort + slice, map-side; "
     "candidates = a prefix-token equi-join AQE can skew-split (a hot "
     "prefix token means a genuinely frequent rare-est token — the "
     "filter already minimizes this by construction); verification "

@@ -520,7 +520,7 @@ SELECT host, outw, pr FROM r2 ORDER BY pr DESC, host
     "weighted graph.",
     tags=("text", "extract", "graph", "iterative"),
 )
-def host_rank(spark: SparkSession, sf_dir: str, iters: int = HOST_PR_ITERS) -> DataFrame:
+def host_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ew = (
         _href_edges(spark, sf_dir)
         .groupBy(
@@ -538,7 +538,7 @@ def host_rank(spark: SparkSession, sf_dir: str, iters: int = HOST_PR_ITERS) -> D
         .agg(F.coalesce(F.sum("w"), F.lit(0)).cast("long").alias("outw"))
     )
     ranks = outw.select("host", "outw", F.lit(1000000).cast("long").alias("pr"))
-    for _ in range(iters):
+    for _ in range(HOST_PR_ITERS):
         contrib = (
             ew.join(
                 ranks.select(

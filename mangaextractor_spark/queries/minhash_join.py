@@ -26,8 +26,8 @@ applied as the round-4 verdict prescribed):
   viral boilerplate family cannot mint O(|Q|x|B|) candidates;
 - the pair subtree carries only (q_id, b_id); signatures / shingle
   sets are enriched back via plain equi-joins on doc_id (AQE), never
-  a forced broadcast of a data-dependent intermediate (the round-4
-  ``dedup_embedding_cosine`` lesson);
+  a forced broadcast of a data-dependent intermediate (the
+  broadcast boundedness rule in queries/_scale_notes.py);
 - best-match is a groupBy max(struct) — a real aggregate with
   map-side partials — not a rank window over candidates.
 

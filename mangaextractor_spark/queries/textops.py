@@ -1042,8 +1042,7 @@ v0 AS (
     "et al. 2016): per round, the highest-frequency adjacent symbol "
     "pair over the corpus word-frequency table (tie-break "
     "lexicographic) is learned and applied to every word's symbol "
-    "sequence — the iterative-algorithm twin of kmeans_fit, and the "
-    "training step whose single-round statistic bpe_pair_counts "
+    "sequence — the training step whose single-round statistic bpe_pair_counts "
     "already exposes. Fully distributed: the argmax pair is a 1-row "
     "TakeOrdered broadcast into the merge-apply (never a driver "
     "collect); the apply is replace-all on the sentinel-delimited "

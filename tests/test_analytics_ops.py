@@ -1,6 +1,6 @@
 """Semantics + plan-shape tests for the round-4 analytics additions:
-exact histogram quantiles, incremental (cross-snapshot) dedup, and the
-k-means assignment step.
+exact histogram quantiles, incremental (cross-snapshot) dedup, sliding
+time windows, the sketch estimators and two relational plan shapes.
 
 Each value test recomputes the operator's DEFINITION independently in
 pandas/numpy (not via the SQL oracle — test_queries_oracle already
@@ -14,8 +14,6 @@ import hashlib
 import math
 import re
 
-import numpy as np
-import pandas as pd
 import pyarrow.parquet as pq
 
 
@@ -73,126 +71,6 @@ def test_incremental_dedup_semantics(spark, sf_small):
     # every survivor is from the increment, and none was ever in the base
     assert all(d % 5 == 4 for d, _ in got.values())
     assert not (set(got) & base_hashes)
-
-
-def test_kmeans_assign_matches_numpy(spark, sf_small):
-    from mangaextractor_spark.queries.similarity import K_CLUSTERS, kmeans_assign
-
-    out = {r["cluster_id"]: r for r in kmeans_assign(spark, sf_small).collect()}
-
-    def dot(a, b):
-        # sequential-sum doubles: the exact accumulation order Spark's
-        # F.aggregate and DuckDB's list_dot_product use (numpy's @ is
-        # pairwise/SIMD and can differ in ulps)
-        s = 0.0
-        for x, y in zip(a, b):
-            s += x * y
-        return s
-
-    tbl = pq.read_table(f"{sf_small}/embeddings.parquet").to_pandas()
-    tbl = tbl.sort_values("vec_id").reset_index(drop=True)
-    embs = {
-        int(r.vec_id): [float(np.float32(x)) for x in r.embedding] for r in tbl.itertuples()
-    }
-    cents = [(cid, embs[cid], math.sqrt(dot(embs[cid], embs[cid]))) for cid in range(K_CLUSTERS)]
-
-    agg: dict[int, list] = {}
-    for vid, v in embs.items():
-        nrm = math.sqrt(dot(v, v))
-        best = None
-        for cid, c, cnrm in cents:  # ascending cid; strict > keeps the smaller cid on ties
-            sim = round(dot(v, c) / (nrm * cnrm), 6)
-            if best is None or sim > best[0]:
-                best = (sim, cid)
-        sim, cid = best
-        a = agg.setdefault(cid, [0, vid, 0])
-        a[0] += 1
-        a[1] = min(a[1], vid)
-        a[2] += int(round(sim * 1_000_000))
-    assert set(out) == set(agg)
-    for cid, (n, mn, s) in agg.items():
-        r = out[cid]
-        assert (r["n_members"], r["min_vec_id"], r["sum_sim_e6"]) == (n, mn, s), cid
-    assert sum(r["n_members"] for r in out.values()) == len(embs)
-
-
-def test_kmeans_assignment_is_map_side(spark, sf_medium):
-    """No per-centroid join fan-out: the corpus side must reach the
-    argmax without a hash-partitioned exchange — the only hash shuffle
-    is the k-row cluster rollup, and the centroid array arrives as a
-    broadcast single row."""
-    from mangaextractor_spark.queries.similarity import kmeans_assign
-
-    plan = kmeans_assign(spark, sf_medium)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan  # 1-row centroid-array build
-    assert plan.count("Exchange hashpartitioning") == 1  # the rollup only
-    assert "hashpartitioning(vec_id" not in plan
-
-
-def test_kmeans_fit_matches_python_lloyds(spark, sf_small):
-    """Two full Lloyd's iterations recomputed independently in python:
-    sequential-sum dot products, argmax with smaller-cid ties, and the
-    quantized-BIGINT centroid mean the engine programs use."""
-    from mangaextractor_spark.queries.similarity import K_CLUSTERS, kmeans_fit
-
-    out = {r["cluster_id"]: r for r in kmeans_fit(spark, sf_small).collect()}
-
-    def dot(a, b):
-        s = 0.0
-        for x, y in zip(a, b):
-            s += x * y
-        return s
-
-    tbl = pq.read_table(f"{sf_small}/embeddings.parquet").to_pandas()
-    embs = {
-        int(r.vec_id): [float(np.float32(x)) for x in r.embedding] for r in tbl.itertuples()
-    }
-    nrms = {vid: math.sqrt(dot(v, v)) for vid, v in embs.items()}
-    dims = len(next(iter(embs.values())))
-
-    def assign(cents):
-        # cents: sorted list of (cid, c_emb, c_nrm)
-        a = {}
-        for vid, v in embs.items():
-            best = None
-            for cid, c, cnrm in cents:
-                sim = round(dot(v, c) / (nrms[vid] * cnrm), 6)
-                if best is None or sim > best[0]:
-                    best = (sim, cid)
-            a[vid] = best
-        return a
-
-    def update(a):
-        sums: dict[int, list[int]] = {}
-        counts: dict[int, int] = {}
-        for vid, (_, cid) in a.items():
-            s = sums.setdefault(cid, [0] * dims)
-            counts[cid] = counts.get(cid, 0) + 1
-            for d, x in enumerate(embs[vid]):
-                s[d] += int(round(x * 1_000_000))
-        cents = []
-        for cid in sorted(sums):
-            c = [s / (counts[cid] * 1_000_000.0) for s in sums[cid]]
-            cents.append((cid, c, math.sqrt(dot(c, c))))
-        return cents
-
-    c0 = [(cid, embs[cid], nrms[cid]) for cid in range(K_CLUSTERS)]
-    a2 = assign(update(assign(c0)))
-
-    agg: dict[int, list] = {}
-    for vid, (sim, cid) in a2.items():
-        a = agg.setdefault(cid, [0, vid, 0, 0])
-        a[0] += 1
-        a[1] = min(a[1], vid)
-        a[2] += int(round(sim * 1_000_000))
-        a[3] += int(round(embs[vid][0] * 1_000_000))
-    assert set(out) == set(agg)
-    for cid, (n_mem, mn, ssim, sq0) in agg.items():
-        r = out[cid]
-        next_c0 = int(round(sq0 / (n_mem * 1_000_000.0) * 1_000_000))
-        assert (
-            r["n_members"], r["min_vec_id"], r["sum_sim_e6"], r["next_c0_e6"]
-        ) == (n_mem, mn, ssim, next_c0), cid
 
 
 def test_events_sliding_1h_matches_pandas(spark, sf_small):

@@ -236,25 +236,6 @@ def test_token_rarity_vocab_window_is_bounded(spark, sf_small):
     assert "Limit" in plan[i_win:] or "TakeOrdered" in plan[i_win:], plan
 
 
-def test_rank_windows_ride_on_pre_topk(spark, sf_small):
-    """The ranking windows in bm25/brute-force-ANN must consume the
-    per-partition pre-top-k (MapInPandas) output, never the raw
-    corpus-sized candidate set — queries/_topk.py."""
-    from mangaextractor_spark.queries import REGISTRY
-
-    for name in ("bm25_topk", "embedding_topk", "lsh_ann_topk", "ivf_ann_topk"):
-        plan = (
-            REGISTRY[name]
-            .spark(spark, sf_small)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        i_win = plan.find("Window")
-        assert i_win != -1, name
-        assert "MapInPandas" in plan[i_win:], f"{name}: window not fed by pre-top-k:\n{plan}"
-
-
 def test_shard_plan_partitions_the_corpus(spark, sf_small):
     from mangaextractor_spark.queries.corpus_prep import N_SHARDS, shard_plan
 
@@ -286,24 +267,6 @@ def test_shard_plan_assignment_is_append_stable(spark, sf_small, tmp_path):
     joined = half.join(full, lsuffix="_half", rsuffix="_full")
     assert (joined["n_docs_half"] <= joined["n_docs_full"]).all()
     assert (joined["n_tokens_half"] <= joined["n_tokens_full"]).all()
-
-
-def test_new_topk_queries_ride_pre_topk(spark, sf_small):
-    """hard_negatives / cluster_balanced_sample rank windows must also
-    consume the per-partition pre-top-k, like every other top-k."""
-    from mangaextractor_spark.queries import REGISTRY
-
-    for name in ("hard_negatives", "cluster_balanced_sample"):
-        plan = (
-            REGISTRY[name]
-            .spark(spark, sf_small)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        i_win = plan.find("Window")
-        assert i_win != -1, name
-        assert "MapInPandas" in plan[i_win:], f"{name}: window not fed by pre-top-k:\n{plan}"
 
 
 def test_shard_plan_aggregates_map_side(spark, sf_small):

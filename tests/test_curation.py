@@ -5,7 +5,7 @@ Value parity at sf0.01 rides the test_queries_oracle parametrization.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
+import pytest
 
 from mangaextractor_spark.queries.curation import (
     DECONTAM_K,
@@ -127,12 +127,43 @@ def test_survivors_consistent_with_clusters(spark, sf_medium):
 
 
 def test_survivors_filter_is_broadcast(spark, sf_medium):
-    """The corpus-side filter must be a broadcast anti-join: the 100 TB
-    scan must not shuffle on the drop list."""
+    """At fixture scale the corpus-side filter runs as a broadcast
+    anti-join, so the scan does not shuffle on the drop list. AQE picks
+    the broadcast at runtime from the drop set's measured size; no
+    static hint forces it."""
     from mangaextractor_spark.queries.dedup import dedup_survivors
 
-    plan = dedup_survivors(spark, sf_medium)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+    df = dedup_survivors(spark, sf_medium)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "BroadcastHashJoin" in final and "LeftAnti" in final
+
+
+@pytest.fixture()
+def no_auto_broadcast(spark):
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    yield
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+@pytest.mark.parametrize("name", ["dedup_survivors", "dedup_ladder_funnel"])
+def test_drop_set_join_is_not_forced_broadcast(spark, sf_medium, no_auto_broadcast, name):
+    """The near-dup drop set grows with the number of duplicates, so
+    its join strategy is the planner's and AQE's call: with
+    autoBroadcastJoinThreshold=-1 no plan may broadcast it, and the
+    result must equal the default-threshold run."""
+    from mangaextractor_spark.queries import REGISTRY
+
+    df = REGISTRY[name].spark(spark, sf_medium)
+    rows = sorted(df.collect())
+    # after execution the adaptive plan prints both its final and its initial plan
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" not in plan, plan
+    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert sorted(REGISTRY[name].spark(spark, sf_medium).collect()) == rows
+    spark.catalog.clearCache()
 
 
 def test_decontam_eval_side_is_broadcast(spark, sf_medium):

@@ -29,7 +29,6 @@ TABLES = [
     "lineitem",
     "events",
     "documents",
-    "embeddings",
 ]
 
 
@@ -107,6 +106,26 @@ def test_rows_only_queries_run(spark, sf_medium):
         if qd.oracle is None:
             n = qd.spark(spark, sf_medium).count()
             assert n >= 0, name
+
+
+# The extraction job's registry entries (queries/extraction_queries.py and
+# queries/main_content.py): trimming the registry must never drop these.
+FLAGSHIPS = (
+    "extract_manga_spans",
+    "extract_manga_spans_vertical",
+    "media_ops",
+    "main_content_spans",
+    "main_content_pdf_spans",
+    "caption_candidates",
+)
+
+
+def test_entry_contract_keeps_flagships():
+    import __spark_entry__ as se
+
+    qs, osql = se.queries(), se.oracle_sql()
+    assert set(osql) <= set(qs)
+    assert set(FLAGSHIPS) <= set(qs), sorted(set(FLAGSHIPS) - set(qs))
 
 
 def test_entry_smoke(spark):

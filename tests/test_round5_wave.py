@@ -163,31 +163,6 @@ def test_token_pmi_plan_is_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_semantic_decontamination_sound(spark):
-    import numpy as np
-
-    pdf = REGISTRY["semantic_decontamination"].spark(spark, SF).toPandas()
-    assert len(pdf) > 0
-    emb = pd.read_parquet(f"{SF}/embeddings.parquet").set_index("vec_id").embedding
-    # split membership: train ids are never in the eval slice, witnesses are
-    assert (pdf.train_id % 10 != 1).all()
-    assert (pdf.eval_id % 10 == 1).all()
-    for r in pdf.itertuples(index=False):
-        a = np.asarray(emb[r.train_id], dtype=float)
-        b = np.asarray(emb[r.eval_id], dtype=float)
-        cos = float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
-        # the query rounds to 6dp before thresholding
-        assert round(cos, 6) >= 0.35
-        assert abs(round(cos, 6) - r.sim) < 2e-6
-
-
-def test_semantic_decontamination_no_brute_force(spark):
-    plan = _plan(REGISTRY["semantic_decontamination"].spark(spark, SF))
-    # the contamination join is an equi-join on the cell key; the only
-    # nested-loop joins are the broadcast centroid fan-outs
-    assert "CartesianProduct" not in plan
-
-
 def test_source_overlap_matrix_recompute(spark):
     import re
 
@@ -310,17 +285,3 @@ def test_disjunctive_revenue_matches_pandas(spark):
     cents = (sel.l_extendedprice * 100).round().astype("int64")
     pct = 100 - (sel.l_discount * 100).round().astype("int64")
     assert round(row.revenue * 10000) == int((cents * pct).sum())
-
-
-def test_ann_recall_eval_consistency(spark):
-    pdf = REGISTRY["ann_recall_eval"].spark(spark, SF).toPandas()
-    assert len(pdf) == 16  # one row per query, no-hit queries included
-    assert (pdf.hits_at_k <= 3).all()
-    hit = pdf[pdf.first_hit_rank > 0]
-    # exact reciprocal-rank integers: rr * rank == scale for every hit
-    assert (hit.rr_x6 * hit.first_hit_rank == 6).all()
-    miss = pdf[pdf.first_hit_rank == 0]
-    assert (miss.hits_at_k == 0).all() and (miss.rr_x6 == 0).all()
-    # the recall this eval reports must agree with the recall gate the
-    # ANN tests already enforce (ivf recall floor at sf0.01)
-    assert pdf.hits_at_k.sum() / (3 * len(pdf)) >= 0.5
