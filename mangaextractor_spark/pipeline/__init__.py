@@ -1,2 +1,2 @@
-from .extract import assemble_documents, extract_spans, ocr_pages  # noqa: F401
+from .extract import extract_spans, ocr_pages  # noqa: F401
 from .checkpoint import run_extraction  # noqa: F401

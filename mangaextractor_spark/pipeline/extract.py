@@ -151,7 +151,6 @@ def extract_spans(
     docs: DataFrame,
     media: DataFrame,
     engine: str = "glyph",
-    broadcast_meta: bool = True,
     furigana: bool = False,
     robust: bool = False,
 ) -> DataFrame:
@@ -160,18 +159,14 @@ def extract_spans(
     Image bytes cross the wire exactly ONCE (the salted repartition
     feeding the kernel): the span metadata side of the media join is
     broadcast, so the heavy media table is never shuffled for the join
-    itself. At 10^12-doc scale where the metadata exceeds broadcast
-    limits, set ``broadcast_meta=False`` — the join then shuffles both
-    sides by media_ref, which is already page-granular (a monster doc's
-    pages hash uniformly), and ``ocr_pages`` can skip its repartition
-    via ``num_partitions=0``."""
+    itself. Inputs whose metadata exceeds broadcast limits go through
+    the chunked runner (``pipeline.checkpoint.run_extraction``), whose
+    staging join is not forced to broadcast."""
     spans = docs.select("doc_id", F.explode("spans").alias("sp")).select(
         "doc_id", "sp.kind", "sp.text", "sp.media_ref", "sp.offset"
     )
     meta = spans.filter(F.col("kind") == "image").select("doc_id", "offset", "media_ref")
-    if broadcast_meta:
-        meta = F.broadcast(meta)
-    pages = media.select("media_ref", "image_bytes").join(meta, "media_ref")
+    pages = media.select("media_ref", "image_bytes").join(F.broadcast(meta), "media_ref")
     ocr = ocr_pages(
         pages,
         engine=engine,
@@ -201,36 +196,4 @@ def number_spans(spans: DataFrame, ocr: DataFrame) -> DataFrame:
     )
     return numbered.select(
         "doc_id", F.lit("text").alias("kind"), "text", "media_ref", F.col("order").cast("int")
-    )
-
-
-def assemble_documents(span_df: DataFrame, salt_buckets: int = 8) -> DataFrame:
-    """Reassemble per-document ordered span arrays (O3 analog —
-    reference parallel_processor.py:180-184 sorts finished page tasks).
-
-    Two-level aggregation: partial collect per (doc_id, salt) so a
-    monster document's spans combine map-side across salt buckets
-    before the final doc-keyed merge — the groupBy twin of the salted
-    repartition used for the kernel stage."""
-    salt = F.pmod(F.xxhash64("media_ref", "order"), F.lit(salt_buckets))
-    partial = (
-        span_df.withColumn("salt", salt)
-        .groupBy("doc_id", "salt")
-        .agg(F.collect_list(F.struct("order", "kind", "text", "media_ref")).alias("part"))
-    )
-    return (
-        partial.groupBy("doc_id")
-        .agg(F.flatten(F.collect_list("part")).alias("unordered"))
-        .select(
-            "doc_id",
-            F.transform(
-                F.array_sort("unordered"),
-                lambda x: F.struct(
-                    x["kind"].alias("kind"),
-                    x["text"].alias("text"),
-                    x["media_ref"].alias("media_ref"),
-                    x["order"].alias("order"),
-                ),
-            ).alias("spans"),
-        )
     )

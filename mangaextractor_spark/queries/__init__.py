@@ -55,7 +55,6 @@ def _load_all() -> None:
         maintenance,
         minhash_gate,
         minhash_join,
-        mm_packing,
         multimodal_queries,
         normalize,
         parsing_queries,

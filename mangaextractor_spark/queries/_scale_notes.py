@@ -59,11 +59,10 @@ SKETCH_BUCKET_CAP = 64
 # parallelism knob), never a data-dependent key with unbounded fan-out.
 # That is the rule: windows are fine when the partition size is chosen
 # by the operator, and forbidden when the data chooses it. At 100 TB
-# size buckets to ~64k docs each: _packing_frame(..., n_buckets=N) and
-# stream_sequence_packing(..., n_buckets=N) expose the knob as a real
-# parameter (round-4 verdict item 3); corpus_prep.PACK_BUCKETS=8 is
-# only the default the registered sf-fixture query (and its oracle SQL)
-# pins. tests/test_corpus_prep.py::test_packing_n_buckets_knob packs
+# size buckets to ~64k docs each: _packing_frame(..., n_buckets=N)
+# exposes the knob as a real parameter (round-4 verdict item 3);
+# corpus_prep.PACK_BUCKETS=8 is only the default the registered
+# sf-fixture query (and its oracle SQL) pins. tests/test_corpus_prep.py::test_packing_n_buckets_knob packs
 # the same corpus at 4 and 16 buckets and checks the boundary rule is
 # invariant.
 
@@ -125,25 +124,3 @@ SKETCH_BUCKET_CAP = 64
 #   DECIMAL(38,0) (both engines support it exactly) before the single
 #   double division. The predicate form (cross-multiplied comparisons)
 #   has the same headroom rule.
-
-# Fourth-session addition — the MULTIMODAL COST MODEL (mm_packing):
-# - Packing/batching over interleaved text+image docs must price image
-#   spans in patch tokens (ceil(w/P)*ceil(h/P) + sentinels), not rows:
-#   one hi-res image outweighs most documents' text, so word-count
-#   packing misbudgets sequences by the image-token share.
-# - The per-doc cost stays BOUNDED because geometry is capped (the
-#   resolution ceiling caps the patch grid), so the packing bucket
-#   window keeps the construction-bounded property of sequence_packing
-#   — a cost model change, not a new shuffle shape.
-# - Within-doc positions (which sequence an image lands in) are a
-#   prefix over the doc's OWN span-cost array — array HOFs, map-side,
-#   O(k^2) in spans-per-doc with k bounded by the document itself;
-#   never a corpus window. The manifest rollups group on
-#   (bucket, seq_id), cardinality total_tokens/SEQ_LEN, uniformly
-#   spread by construction.
-# - Aspect bucketing's nearest-ratio argmin is exact integer math:
-#   |w/h - bw/bh| comparisons cross-multiply onto a common lcm
-#   denominator (the h factor cancels), and the bucket index rides the
-#   low bits of the scaled score for a single-BIGINT argmin with a
-#   deterministic tie-break — the same integer-exactness corollary as
-#   the ratio thresholds above.

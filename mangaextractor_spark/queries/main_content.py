@@ -106,13 +106,11 @@ def interleaved_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def survivors_col(spans: Column) -> Column:
-    """THE per-kind extraction + empty-drop rule (order-free), shared
-    by main_content_spans_df (which sorts and renumbers around it) and
-    mm_packing's token accounting (which only aggregates over it):
-    image spans pass with their media_ref, html spans go through the
-    main-content chain, text spans pass verbatim; spans whose
-    extracted text is '' and are not images are dropped. One
-    definition so the two surfaces cannot drift."""
+    """THE per-kind extraction + empty-drop rule (order-free), which
+    main_content_spans_df sorts and renumbers around: image spans pass
+    with their media_ref, html spans go through the main-content
+    chain, text spans pass verbatim; spans whose extracted text is ''
+    and are not images are dropped."""
     extracted = F.transform(
         spans,
         lambda s: F.struct(

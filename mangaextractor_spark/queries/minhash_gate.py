@@ -19,9 +19,7 @@ Composes the repo's two scale primitives into a third capability:
 At 10^12 docs the register stays one broadcast row (constant in the
 corpus, BLOOM_BITS is the sandbox-scale knob — production sizes ~10
 bits per base band), so gating an arriving snapshot costs one scan of
-the snapshot. The streaming twin (streaming/minhash_gate.py) runs THE
-SAME frame function per micro-batch — stream/batch agreement is by
-construction, the bloom_gate.py discipline.
+the snapshot.
 
 Reference: none (capability beyond the reference). Public algorithm:
 Broder resemblance sketches + Bloom 1970; the screen-then-verify
@@ -84,9 +82,8 @@ def band_key_frame(docs: DataFrame) -> DataFrame:
 
 def band_register_row(base_docs: DataFrame) -> DataFrame:
     """ONE-row Bloom register over the base corpus's band keys —
-    constant-size, broadcastable, persist()ed (bloom_register_row);
-    build once per base snapshot, reuse across every gated batch or
-    micro-batch."""
+    constant-size and broadcastable (bloom_register_row); the gate
+    broadcasts it once per query."""
     keys = band_key_frame(base_docs).select(
         F.explode("band_keys").alias("content_hash")
     )
@@ -96,8 +93,9 @@ def band_register_row(base_docs: DataFrame) -> DataFrame:
 # Per-key Bloom membership test as a nested higher-order-function
 # expression (k is the outer lambda's band-key variable): BLOOM_K
 # positions via the portable 60-bit hash, each bit-tested against the
-# broadcast register map. Same arithmetic as scale_ops._BLOOM_HIT_EXPR,
-# parameterized over the key variable instead of a fixed column.
+# broadcast register map. Same positions as scale_ops.bloom_positions,
+# written in SQL because shiftright takes a column bit count there (the
+# python API wants a literal).
 _KEY_HIT = (
     "forall("
     f" transform(array({', '.join(str(j) for j in range(BLOOM_K))}),"
@@ -116,8 +114,7 @@ def minhash_gate_frame(docs: DataFrame, register_row: DataFrame) -> DataFrame:
     """(doc_id, text) -> (doc_id, n_bands, n_hot_bands,
     near_dup_candidate) entirely map-side: band keys per doc, each
     probed against the broadcast register inside one array expression.
-    No aggregation, no watermark, no state — the SAME frame streams in
-    append mode (stream-static broadcast join + stateless map)."""
+    No aggregation and no shuffle: a broadcast cross join and a map."""
     return (
         band_key_frame(docs)
         .crossJoin(F.broadcast(register_row))
@@ -204,8 +201,7 @@ WHERE d.side = 'query' ORDER BY d.doc_id
     "broadcast row, constant in the corpus, so gating a snapshot costs "
     "one scan of the snapshot. No-false-negative containment vs the "
     "exact minhash_join candidates is asserted in "
-    "tests/test_minhash_gate.py; the streaming twin runs this very "
-    "frame per micro-batch.",
+    "tests/test_minhash_gate.py.",
     tags=("dedup", "sketch", "gate"),
 )
 def near_dup_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:

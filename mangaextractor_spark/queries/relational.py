@@ -327,8 +327,8 @@ def event_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY event_type, date_trunc('hour', ts)
     ORDER BY event_type, hour
     """,
-    doc="Tumbling time-bucket aggregation (batch form; the streaming twin "
-    "uses window(ts,'1 hour') + watermark in streaming/).",
+    doc="Tumbling time-bucket aggregation: one map-side-combined groupBy "
+    "on (event_type, date_trunc('hour', ts)).",
     tags=("agg", "time"),
 )
 def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -548,6 +548,30 @@ def event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+GAP = "30 minutes"
+
+
+def session_stats(events: DataFrame) -> DataFrame:
+    """Session aggregation: one row per (user, session) with the
+    session bounds Spark assigns (start = first event, end = last
+    event + GAP). The value sum rides DECIMAL inside the aggregation
+    (exact, order-independent) and converts to DOUBLE once."""
+    return (
+        events.groupBy("user_id", F.session_window(F.col("ts"), GAP).alias("sw"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.col("value").cast(DEC)).cast("double").alias("value_sum"),
+        )
+        .select(
+            "user_id",
+            F.col("sw.start").alias("session_start"),
+            F.col("sw.end").alias("session_end"),
+            "n_events",
+            "value_sum",
+        )
+    )
+
+
 @register(
     "session_window_stats",
     """
@@ -579,18 +603,14 @@ def event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(per-event windows [ts, ts+30min] merged INCLUSIVELY by Catalyst's "
     "session aggregation — an event exactly at a session's end extends "
     "it, pinned by tests' exact-gap fixture) — one shuffle on user_id, NO per-user ORDER "
-    "BY window, and the same transformation runs unchanged on an "
-    "unbounded stream (streaming/sessions.py: watermark closes a "
-    "session, append emits it exactly once). The oracle restates the "
-    "merge rule relationally (new session iff the gap EXCEEDS 30 min — "
+    "BY window. The oracle restates the merge rule relationally (new "
+    "session iff the gap EXCEEDS 30 min — "
     "the same > rule as event_sessions, so the two constructions are "
     "interchangeable) and must agree on bounds (start = first event, end = last "
     "event + gap), counts, and the DECIMAL-exact value sum.",
-    tags=("window", "sessionization", "streaming-twin"),
+    tags=("window", "sessionization"),
 )
 def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.sessions import session_stats
-
     e = load_table(spark, sf_dir, "events")
     return session_stats(e).orderBy("user_id", "session_start")
 
@@ -802,8 +822,7 @@ def asof_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     "double once at the end. Scale: partitioned by user_id — per-entity "
     "series are the one window shape that cannot be pre-aggregated "
     "away; state is bounded by one entity's events per task, and a "
-    "pathologically hot entity moves to the streaming twin "
-    "(streaming/windowed.py) or a tumbling pre-agg.",
+    "pathologically hot entity moves to a tumbling pre-agg.",
     tags=("window", "time"),
 )
 def events_sliding_1h(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -719,7 +719,7 @@ def feature_hash_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -- shared Bloom helpers (batch query above; streaming/bloom_gate.py) ----
+# -- Bloom register row (probed by queries/minhash_gate.py) --------------
 
 
 def bloom_positions(hash_col: F.Column) -> F.Column:
@@ -742,8 +742,7 @@ def bloom_register_row(base_hashes: DataFrame) -> DataFrame:
     """Fold a (content_hash) frame into ONE row holding the filter as
     map<word, bits>. The map has at most BLOOM_BITS/BLOOM_WORD_BITS
     entries — constant in the corpus — so broadcasting this row is the
-    sketch's whole point. persist()ed so a streaming plan does not
-    rebuild the base scan every micro-batch."""
+    sketch's whole point. Not cached: a query broadcasts it once."""
     words = (
         base_hashes.select(F.explode(bloom_positions(F.col("content_hash"))).alias("pos"))
         .select(
@@ -757,38 +756,6 @@ def bloom_register_row(base_hashes: DataFrame) -> DataFrame:
     )
     return words.agg(
         F.map_from_entries(F.collect_list(F.struct("word", "bits"))).alias("bloom")
-    ).persist()
-
-
-# The probe's hit test as one SQL higher-order-function expression:
-# positions via the portable hash, each tested against the broadcast
-# register map. SQL form because shiftright/shiftleft take column bit
-# counts there (the python API wants literals).
-_BLOOM_HIT_EXPR = (
-    "forall("
-    f"  transform(array({', '.join(str(j) for j in range(BLOOM_K))}),"
-    "   j -> CAST(conv(substring(md5(CAST(concat_ws(':', content_hash, j) AS BINARY)),"
-    f"   1, 15), 16, 10) AS BIGINT) % {BLOOM_BITS}),"
-    f"  p -> (shiftright(COALESCE(element_at(bloom, p DIV {BLOOM_WORD_BITS}),"
-    f"   CAST(0 AS BIGINT)), CAST(p % {BLOOM_WORD_BITS} AS INT))"
-    "   & CAST(1 AS BIGINT)) = 1"
-    ")"
-)
-
-
-def bloom_probe_frame(docs: DataFrame, register_row: DataFrame) -> DataFrame:
-    """(doc_id, text) -> (doc_id, content_hash, bloom_hit) entirely
-    map-side: the one-row register map rides a broadcast cross join and
-    each doc tests its BLOOM_K positions with array ops — no
-    aggregation, so the SAME frame streams in append mode with no
-    watermark/state (stream-static broadcast join + stateless map)."""
-    hashed = docs.select(
-        "doc_id", F.md5(F.col("text").cast("binary")).alias("content_hash")
-    )
-    return hashed.crossJoin(F.broadcast(register_row)).select(
-        "doc_id",
-        "content_hash",
-        F.expr(_BLOOM_HIT_EXPR).alias("bloom_hit"),
     )
 
 

@@ -442,9 +442,7 @@ FROM corrected ORDER BY lang
 
 def hll_token_registers(toks: DataFrame) -> DataFrame:
     """(lang, token) rows -> raw (lang, bucket, rho) register
-    observations, all map-side Column expressions. Shared by the batch
-    query and the streaming twin (streaming/hll.py) so the sketch
-    contract cannot diverge."""
+    observations, all map-side Column expressions."""
     hv = phash60(F.col("token"))
     suffix = hv.bitwiseAND(F.lit(_HLL_MASK))
     rho = F.when(suffix == 0, F.lit(_HLL_SUFFIX_BITS + 1)).otherwise(

@@ -100,6 +100,40 @@ def test_events_sliding_1h_matches_pandas(spark, sf_small):
             assert got["value_1h"] == float(exact), r.event_id
 
 
+def test_session_window_exact_gap_boundary(spark):
+    """Pins the boundary rule the registered oracle states: Spark merges
+    INCLUSIVELY (an event exactly at prev + 30 min extends the session);
+    only a strictly larger gap — here 30 min + 1 s — starts a new one.
+    Same > split rule as the hand-rolled event_sessions."""
+    import datetime as dt
+
+    import pandas as pd
+
+    from mangaextractor_spark.queries.relational import session_stats
+
+    t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
+
+    def mins(m):
+        return t0 + dt.timedelta(minutes=m)
+
+    rows = [
+        (1, mins(0), 1, "view", 1.0, "{}"),
+        (2, mins(29), 1, "view", 2.0, "{}"),  # 29 < 30 min gap: merges
+        (3, mins(59), 1, "buy", 10.0, "{}"),  # EXACTLY 30 min after #2: still merges
+        (4, mins(89) + dt.timedelta(seconds=1), 1, "view", 5.0, "{}"),  # 30m+1s: NEW session
+        (5, mins(5), 2, "view", 3.0, "{}"),
+    ]
+    events = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"])
+    )
+    got = session_stats(events).orderBy("user_id", "session_start").collect()
+    u1 = [r for r in got if r.user_id == 1]
+    assert len(u1) == 2
+    assert (u1[0].session_start, u1[0].n_events, u1[0].value_sum) == (mins(0), 3, 13.0)
+    assert u1[0].session_end == mins(59 + 30)
+    assert (u1[1].session_start, u1[1].n_events) == (mins(89) + dt.timedelta(seconds=1), 1)
+
+
 def test_hll_distinct_tokens_matches_python_hll(spark, sf_small):
     """Registers and estimate recomputed independently: portable 60-bit
     md5 hash, bucket/rho bit ops, scaled-BIGINT harmonic sum, linear

@@ -1,8 +1,7 @@
-"""Near-dup Bloom gate: stream/batch parity (the shared
-minhash_gate_frame against the shared register), the no-false-negative
-containment vs the exact LSH candidate join, and exactly-once restart
-via the file-sink log. Oracle parity for the registered batch query
-rides test_queries_oracle.py."""
+"""Near-dup Bloom gate: the no-false-negative containment vs the exact
+LSH candidate join, the register's shape, and that the query leaves
+nothing cached. Oracle parity for the registered batch query rides
+test_queries_oracle.py."""
 
 from __future__ import annotations
 
@@ -15,7 +14,6 @@ from mangaextractor_spark.queries.minhash_gate import (
     minhash_gate_frame,
 )
 from mangaextractor_spark.queries.minhash_join import _side_col
-from mangaextractor_spark.streaming.minhash_gate import stream_minhash_gate
 
 
 def _sides(spark, sf_small):
@@ -57,43 +55,18 @@ def test_gate_short_docs_get_empty_bands(spark):
     assert len(keys[3]) == 2 and all(":" in k for k in keys[3])
 
 
-def test_stream_gate_equals_batch_and_restart(spark, sf_small, tmp_path):
-    """Drop 1: the query-side docs — per-doc rows must equal the batch
-    frame bit-for-bit. Drop 2 (restart): exact copies of base docs
-    under new ids — every band a copy has is IN the register, so all
-    bands hot; the sink log must not regate drop 1."""
-    base, queries = _sides(spark, sf_small)
-    reg = band_register_row(base)
-    docs_dir, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
-
-    queries.coalesce(1).write.mode("append").parquet(docs_dir)
-    q = stream_minhash_gate(spark, docs_dir, reg, out, ckpt)
-    q.awaitTermination(120)
-    got = {
-        r["doc_id"]: (r["n_bands"], r["n_hot_bands"], r["near_dup_candidate"])
-        for r in spark.read.parquet(out).collect()
-    }
-    want = {
-        r["doc_id"]: (r["n_bands"], r["n_hot_bands"], r["near_dup_candidate"])
-        for r in minhash_gate_frame(queries, reg).collect()
-    }
-    assert got == want and len(got) == queries.count()
-
-    copies = base.limit(20).select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
-    copies.coalesce(1).write.mode("append").parquet(docs_dir)
-    q = stream_minhash_gate(spark, docs_dir, reg, out, ckpt)
-    q.awaitTermination(120)
-    pdf = spark.read.parquet(out).toPandas()
-    assert len(pdf) == queries.count() + copies.count()
-    assert pdf["doc_id"].is_unique, "file-sink log must dedupe replayed batches"
-    member = pdf[pdf["doc_id"] >= 1_000_000]
-    with_bands = member[member["n_bands"] > 0]
-    assert (with_bands["n_hot_bands"] == with_bands["n_bands"]).all(), (
-        "false negative: a copied base doc's bands are register members"
-    )
-
-
 def test_register_is_one_row(spark, sf_small):
     base, _ = _sides(spark, sf_small)
     reg = band_register_row(base).collect()
     assert len(reg) == 1 and len(reg[0]["bloom"]) >= 1
+
+
+def test_gate_leaves_nothing_cached(spark, sf_small):
+    """The query broadcasts its register once; running it must leave no
+    cached frame behind in the session."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    df = REGISTRY["near_dup_bloom_gate"].spark(spark, sf_small)
+    df.collect()
+    assert "InMemoryRelation" not in df._jdf.queryExecution().withCachedData().toString()
+    assert set(jsc.getPersistentRDDs().keys()) <= before

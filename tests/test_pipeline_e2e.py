@@ -10,7 +10,7 @@ import pytest
 
 from mangaextractor_spark.fixtures.generator import CorpusSpec, generate_corpus
 from mangaextractor_spark.fixtures.spark_io import docs_to_spark, golden_to_spark, media_to_spark
-from mangaextractor_spark.pipeline.extract import assemble_documents, extract_spans
+from mangaextractor_spark.pipeline.extract import extract_spans
 
 
 @pytest.fixture(scope="module")
@@ -47,20 +47,6 @@ def test_orders_dense_per_doc(result_and_golden):
         .filter((F.col("mn") != 0) | (F.col("mx") != F.col("n") - 1))
     )
     assert bad.count() == 0
-
-
-def test_assemble_documents_round_trip(spark, result_and_golden, corpus):
-    result, _ = result_and_golden
-    assembled = assemble_documents(result)
-    pdf = assembled.toPandas().set_index("doc_id")
-    golden = corpus["golden_spans"]
-    for doc_id, g in golden.groupby("doc_id"):
-        got = [(s["text"], s["media_ref"], s["order"]) for s in pdf.loc[doc_id, "spans"]]
-        exp = [
-            (r.text, r.media_ref, r.order)
-            for r in g.sort_values("order").itertuples()
-        ]
-        assert got == exp, doc_id
 
 
 def test_empty_docs_table(spark):
@@ -278,31 +264,6 @@ def test_extract_plan_shuffle_discipline(spark, corpus):
     assert plan.count("Exchange hashpartitioning") == 1  # the span window only
     assert plan.count("BroadcastExchange") >= 1  # metadata side of the media join
     assert not any("image_bytes" in l for l in exchange_lines)
-
-
-def test_extract_broadcast_meta_false_golden_and_plan(spark, corpus):
-    """The documented escape hatch for metadata exceeding broadcast
-    limits at 10^12-doc scale (extract_spans(broadcast_meta=False)):
-    same spans, and the media join genuinely shuffle-joins — no
-    BroadcastExchange anywhere in the executed plan (auto-broadcast is
-    pinned off so AQE cannot silently re-broadcast the small test
-    corpus and mask a regression)."""
-    from mangaextractor_spark.fixtures.spark_io import golden_to_spark
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        docs = docs_to_spark(spark, corpus["documents"])
-        media = media_to_spark(spark, corpus["media"]).repartition(8)
-        df = extract_spans(docs, media, broadcast_meta=False)
-        golden = golden_to_spark(spark, corpus["golden_spans"])
-        key = ["doc_id", "kind", "text", "media_ref", "order"]
-        assert df.select(key).exceptAll(golden.select(key)).count() == 0
-        assert golden.select(key).exceptAll(df.select(key)).count() == 0
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastExchange" not in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_kitchen_sink_everything_at_once(spark, tmp_path):

@@ -1,5 +1,5 @@
 """Semantics + plan-shape tests for queries/scale_ops.py (bigram LM
-quality, Bloom-filter decontamination, Z-order layout).
+quality, Bloom-filter decontamination and register row, Z-order layout).
 
 Value tests recompute each operator's DEFINITION independently in
 python/pandas (test_queries_oracle covers Spark<->DuckDB parity; this
@@ -121,6 +121,27 @@ def test_bloom_exhibits_false_positives(spark, sf_medium):
     rows = bloom_decontamination(spark, sf_medium).collect()
     fp = [r for r in rows if r["bloom_hit"] and not r["true_dup"]]
     assert fp, "expected visible false positives on the small grid"
+
+
+def test_register_row_is_constant_size(spark, sf_small):
+    from pyspark.sql import functions as F
+
+    from mangaextractor_spark.queries.scale_ops import BLOOM_BITS, bloom_register_row
+
+    base_docs = spark.read.parquet(f"{sf_small}/documents.parquet").filter(
+        F.col("doc_id") % 5 != 4
+    )
+    base = base_docs.select(F.md5(F.col("text").cast("binary")).alias("content_hash")).distinct()
+    reg = bloom_register_row(base).collect()
+    assert len(reg) == 1
+    bloom = reg[0]["bloom"]
+    assert len(bloom) <= BLOOM_BITS // 32
+    # python recompute of one register word proves the bit layout
+    some_hash = sorted(
+        hashlib.md5(r["text"].encode()).hexdigest() for r in base_docs.select("text").collect()
+    )[0]
+    pos = _phash60(f"{some_hash}:0") % BLOOM_BITS
+    assert (bloom[pos // 32] >> (pos % 32)) & 1 == 1
 
 
 def _morton(lang_code: int, len_b: int) -> int:
