@@ -84,7 +84,7 @@ def media_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = generate_corpus(
         CorpusSpec(n_docs=12, seed=42, p_jpeg=0.5, p_color_jpeg=0.5)
     )
-    media = media_to_spark(spark, corpus["media"]).cache()
+    media = media_to_spark(spark, corpus["media"])
     meta = media_metadata(media)  # includes the P4 content_md5
     th = thumbnails(media).select("media_ref", "thumb_w", "thumb_h")
     return meta.join(th, "media_ref").select(

@@ -83,9 +83,16 @@ def band_key_frame(docs: DataFrame) -> DataFrame:
 def band_register_row(base_docs: DataFrame) -> DataFrame:
     """ONE-row Bloom register over the base corpus's band keys —
     constant-size and broadcastable (bloom_register_row); the gate
-    broadcasts it once per query."""
-    keys = band_key_frame(base_docs).select(
-        F.explode("band_keys").alias("content_hash")
+    broadcasts it once per query.
+
+    explode_outer + a null filter yields the same rows as explode, but
+    a plain explode lets Catalyst infer ``size(band_keys) > 0`` and push
+    it below the projections, inlining the whole MinHash expression tree
+    into that filter."""
+    keys = (
+        band_key_frame(base_docs)
+        .select(F.explode_outer("band_keys").alias("content_hash"))
+        .filter(F.col("content_hash").isNotNull())
     )
     return bloom_register_row(keys.distinct())
 

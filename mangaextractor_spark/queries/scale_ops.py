@@ -258,8 +258,8 @@ def bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 Z_BITS = 8  # bits per dimension
 Z_FILES = 16
 Z_LEN_DIV = 4  # n_chars DIV 4, capped to 8 bits (spans the fixture's 48..553-char band)
-# Declared language domain (like orders_priority_pivot): data-driven
-# rank discovery would cost a scan; unknown langs go to the top bucket.
+# Declared language domain: data-driven rank discovery would cost a
+# scan; unknown langs go to the top bucket.
 Z_LANG_CODES = {"de": 0, "en": 1, "es": 2, "fr": 3, "zh": 4}
 Z_LANG_DEFAULT = 7
 

@@ -1,6 +1,7 @@
 """Semantics + plan-shape tests for the round-4 analytics additions:
 exact histogram quantiles, incremental (cross-snapshot) dedup, sliding
-time windows, the sketch estimators and two relational plan shapes.
+time windows and sessions, the sketch estimators, and the near-dup
+PageRank and MinHash accuracy operators.
 
 Each value test recomputes the operator's DEFINITION independently in
 pandas/numpy (not via the SQL oracle — test_queries_oracle already
@@ -215,19 +216,6 @@ def test_cm_heavy_hitters_matches_python_sketch(spark, sf_small):
     assert all(r["overestimate"] >= 0 for r in rows)  # CM never undercounts
 
 
-def test_regional_revenue_broadcasts_dimensions(spark, sf_medium):
-    """The dimension chain must broadcast — the fact table never
-    shuffles on a dimension key."""
-    from mangaextractor_spark.queries.relational import regional_revenue
-
-    plan = (
-        regional_revenue(spark, sf_medium)._jdf.queryExecution().executedPlan().toString()
-    )
-    assert plan.count("BroadcastHashJoin") >= 3
-    assert "hashpartitioning(c_custkey" not in plan
-    assert "hashpartitioning(l_suppkey" not in plan
-
-
 def test_length_mad_matches_type1_definition(spark, sf_small):
     from mangaextractor_spark.queries.textops import length_mad
 
@@ -314,23 +302,3 @@ def test_minhash_jaccard_accuracy_matches_python(spark, sf_small):
         assert r["est_jaccard"] == round(n_match / N_PERMS, 6)
         assert r["true_jaccard"] == true_j
         assert r["err_e6"] == int(round((round(n_match / N_PERMS, 6) - true_j) * 1_000_000))
-
-
-def test_unpivot_adds_no_exchange_after_pivot(spark, sf_medium):
-    """Unpivot is a per-row expansion (Expand/Generate), never a
-    shuffle: exactly the pivot aggregation's exchange may appear."""
-    from mangaextractor_spark.queries.relational import orders_priority_unpivot
-
-    plan = (
-        orders_priority_unpivot(spark, sf_medium)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # the Expand (melt) node exists, and everything ABOVE it adds no
-    # hash exchange — only the presentation sort's range partitioning;
-    # the two hash exchanges below it belong to the pivot aggregation
-    assert "Expand" in plan
-    above = plan[: plan.index("Expand")]
-    assert "Exchange hashpartitioning" not in above
-    assert "Window" not in plan

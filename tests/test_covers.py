@@ -103,3 +103,33 @@ def test_color_cover_thumbnails(spark):
         got = decode_rgb_image(bytes(r.cover_bytes))
         assert got.shape == expected.shape == (r.thumb_h, r.thumb_w, 3)
         assert np.abs(got.astype(int) - expected.astype(int)).mean() < 6.0
+
+
+def test_corrupt_png_cover_is_marker_row_not_crash(spark):
+    """zlib-level corruption (valid PNG header, broken IDAT) must become
+    a failure-marker cover row, not a job failure."""
+    import numpy as np
+    import pandas as pd
+
+    from mangaextractor_spark.fixtures.png import encode_gray_png
+    from mangaextractor_spark.functions.covers import covers
+    from mangaextractor_spark.fixtures.spark_io import media_to_spark
+
+    good = encode_gray_png(np.full((40, 30), 200, dtype=np.uint8))
+    corrupt = bytearray(good)
+    corrupt[40:60] = b"\x00" * 20  # wreck the IDAT payload
+    media = media_to_spark(
+        spark,
+        pd.DataFrame(
+            [
+                {"media_ref": "A/capa/ok.png", "image_bytes": bytes(good),
+                 "width": 30, "height": 40, "page_md5": "x"},
+                {"media_ref": "B/capa/bad.png", "image_bytes": bytes(corrupt),
+                 "width": 30, "height": 40, "page_md5": "y"},
+            ]
+        ),
+    )
+    rows = {r.doc_id: r for r in covers(media).collect()}
+    assert rows["A"].cover_bytes is not None
+    assert rows["B"].cover_bytes is None  # marker row, job survived
+    assert (rows["B"].orig_w, rows["B"].thumb_w) == (0, 0)

@@ -1,10 +1,11 @@
 """Near-dup Bloom gate: the no-false-negative containment vs the exact
-LSH candidate join, the register's shape, and that the query leaves
-nothing cached. Oracle parity for the registered batch query rides
-test_queries_oracle.py."""
+LSH candidate join, the register's shape and plan size, and that the
+query (like the media_ops flagship) leaves nothing cached. Oracle
+parity for the registered batch query rides test_queries_oracle.py."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mangaextractor_spark.queries import REGISTRY
@@ -14,6 +15,7 @@ from mangaextractor_spark.queries.minhash_gate import (
     minhash_gate_frame,
 )
 from mangaextractor_spark.queries.minhash_join import _side_col
+from mangaextractor_spark.queries.scale_ops import BLOOM_K
 
 
 def _sides(spark, sf_small):
@@ -61,12 +63,25 @@ def test_register_is_one_row(spark, sf_small):
     assert len(reg) == 1 and len(reg[0]["bloom"]) >= 1
 
 
-def test_gate_leaves_nothing_cached(spark, sf_small):
-    """The query broadcasts its register once; running it must leave no
-    cached frame behind in the session."""
+def test_register_plan_does_not_repeat_minhash(spark, sf_small):
+    """Folding the band keys into the register adds only the BLOOM_K
+    position hashes: the MinHash band-key tree is not inlined again."""
+    base, _ = _sides(spark, sf_small)
+
+    def n_md5(df):
+        return df._jdf.queryExecution().optimizedPlan().toString().count("md5(")
+
+    assert n_md5(band_register_row(base)) <= n_md5(band_key_frame(base)) + BLOOM_K
+
+
+@pytest.mark.parametrize("name", ["near_dup_bloom_gate", "media_ops"])
+def test_gate_leaves_nothing_cached(spark, sf_small, name):
+    """The gate broadcasts its register once and media_ops re-reads its
+    local media table; running either must leave no cached frame
+    behind in the session."""
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keys())
-    df = REGISTRY["near_dup_bloom_gate"].spark(spark, sf_small)
+    df = REGISTRY[name].spark(spark, sf_small)
     df.collect()
     assert "InMemoryRelation" not in df._jdf.queryExecution().withCachedData().toString()
     assert set(jsc.getPersistentRDDs().keys()) <= before

@@ -20,10 +20,7 @@ import pytest
 from mangaextractor_spark.queries import REGISTRY
 
 TABLES = [
-    "region",
-    "nation",
     "customer",
-    "supplier",
     "part",
     "orders",
     "lineitem",

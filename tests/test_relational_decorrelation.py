@@ -1,79 +1,18 @@
-"""Plan + semantics gates for the TPC-H Q16/Q20/Q22-shaped queries.
+"""Plan + semantics gates for two scale-claim operators:
 
-The decorrelation shapes carry explicit scale claims in their
-docstrings; these tests pin the claims to the physical plan:
-
-- ``dominant_supplier_share``: the per-part totals branch must
-  re-aggregate the persisted (part,supplier) partials, NOT re-scan
-  lineitem (Spark's ReuseExchange does not match the two subtrees, so
-  without the persist the lineitem scan + partial agg runs twice).
-- ``parts_supplier_counts``: the blocked-supplier exclusion must be a
-  LEFT ANTI join, never a per-row NOT IN probe.
-- ``prospective_customers``: the above-segment-average predicate is
-  exact DECIMAL cross-multiplication — verified against an independent
-  pandas recompute (no division anywhere until the output cast).
+- ``priority_sample``: size-biased priority sampling must plan as a
+  TakeOrderedAndProject (never a global sort) and draw heavier docs
+  than the corpus mean, deterministically;
+- ``jaccard_prefix_join``: the prefix-filter length matches the ceil
+  math, and every returned pair meets the exact integer threshold
+  (J == 1/2 included).
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
 from mangaextractor_spark.queries import REGISTRY
 
 SF = "/root/testdata/sf0.01"
-
-
-def test_dominant_supplier_single_lineitem_scan(spark):
-    df = REGISTRY["dominant_supplier_share"].spark(spark, SF)
-    df.collect()  # materialize so AQE finalizes and the cache is built
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # Both consumers of the (part,supplier) partials read the cache.
-    assert plan.count("InMemoryTableScan") >= 2
-    spark.catalog.clearCache()
-
-
-def test_parts_supplier_counts_is_anti_join(spark):
-    df = REGISTRY["parts_supplier_counts"].spark(spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "LeftAnti" in plan
-    # The distinct-supplier count is the two-phase Expand aggregate or a
-    # distinct-input HashAggregate; either way it is a partial-capable
-    # aggregate, not a global collect.
-    assert "HashAggregate" in plan
-
-
-def test_prospective_customers_matches_pandas(spark):
-    got = {
-        r.segment: (r.n_customers, r.total_bal)
-        for r in REGISTRY["prospective_customers"].spark(spark, SF).collect()
-    }
-    c = pd.read_parquet(f"{SF}/customer.parquet")
-    o = pd.read_parquet(f"{SF}/orders.parquet")
-    cents = (c.c_acctbal * 100).round().astype("int64")  # exact 2dp fixed-point
-    pos = c[c.c_acctbal > 0]
-    seg_sum = (pos.c_acctbal * 100).round().astype("int64").groupby(pos.c_mktsegment).sum()
-    seg_cnt = pos.groupby("c_mktsegment").size()
-    recent = o[o.o_orderdate >= pd.Timestamp("2000-01-01")]
-    no_orders = ~c.c_custkey.isin(set(recent.o_custkey))
-    above = c.c_mktsegment.map(seg_cnt).fillna(0).astype("int64") * cents > c.c_mktsegment.map(
-        seg_sum
-    ).fillna(0).astype("int64")
-    sel = c[no_orders & above]
-    want = {
-        seg: (int(n), round(float(total) / 100.0, 10))
-        for seg, (n, total) in pd.DataFrame(
-            {
-                "n": sel.groupby("c_mktsegment").size(),
-                "t": (sel.c_acctbal * 100).round().astype("int64").groupby(sel.c_mktsegment).sum(),
-            }
-        )
-        .apply(lambda r: (r.n, r.t), axis=1)
-        .items()
-    }
-    assert set(got) == set(want)
-    for seg, (n, total) in want.items():
-        assert got[seg][0] == n
-        assert abs(got[seg][1] - total) < 1e-9
 
 
 def test_priority_sample_is_size_biased_topk(spark):
