@@ -48,6 +48,7 @@ SMOOTHING_MULTIPLIER = 0.75  # reference core/defaults.py:18-19
 MIN_TEXT_SIZE = 7  # reference core/defaults.py:25
 MAX_VSPACE_VARIANCE = 5.0  # reference core/defaults.py:26
 WHITE_THRESHOLD = 240
+BUBBLE_MIN_AREA = 600  # px^2: smaller white components are not bubbles
 INK_THRESHOLD = 128
 
 
@@ -386,11 +387,11 @@ def label_components_bbox(mask: np.ndarray) -> CCStats:
     return st
 
 
-def average_cc_size(stats: CCStats, lo: float = 3.0, hi: float = 100.0) -> float:
+def average_cc_size(stats: CCStats) -> float:
     """K7: median of sqrt(bbox area) over CCs whose sqrt size is in
-    (lo, hi) px (reference utils/helpers.py:187-206)."""
+    (3, 100) px (reference utils/helpers.py:187-206)."""
     s = np.sqrt(stats.bbox_area().astype(np.float64))
-    sel = s[(s > lo) & (s < hi)]
+    sel = s[(s > 3.0) & (s < 100.0)]
     return float(np.median(sel)) if sel.size else 0.0
 
 
@@ -413,19 +414,14 @@ CANNY_LOW = 128  # reference cv2.Canny(img, 128, 255, ...) cleaning.py:52
 CANNY_HIGH = 255
 
 
-def sobel_edges(
-    img: np.ndarray,
-    low: float = CANNY_LOW,
-    high: float = CANNY_HIGH,
-    gate: np.ndarray | None = None,
-) -> np.ndarray:
+def sobel_edges(img: np.ndarray, gate: np.ndarray | None = None) -> np.ndarray:
     """K9 edge mask: 3x3 Sobel L1 magnitude (|gx|+|gy|, cv2.Canny's
-    default gradient) with hysteresis — weak-edge (>= low) components
-    are kept only when they contain at least one strong (>= high)
-    pixel, exactly Canny's edge-tracking rule. Non-maximum suppression
-    is deliberately omitted: the only consumer is the convex-hull fill
-    (reference cleaning.py:51-68), for which the hull of a thick edge
-    equals the hull of its thinned ridge."""
+    default gradient) with hysteresis — weak-edge (>= CANNY_LOW)
+    components are kept only when they contain at least one strong
+    (>= CANNY_HIGH) pixel, exactly Canny's edge-tracking rule.
+    Non-maximum suppression is deliberately omitted: the only consumer
+    is the convex-hull fill (reference cleaning.py:51-68), for which
+    the hull of a thick edge equals the hull of its thinned ridge."""
     # float32 is EXACT for 8-bit inputs (integer sobel weights keep all
     # intermediates integral < 2^24); float blurred inputs were already
     # cast to float32 here before, so asarray just skips the copy.
@@ -436,8 +432,8 @@ def sobel_edges(
     dy = p[2:, :] - p[:-2, :]
     gy = dy[:, :-2] + 2.0 * dy[:, 1:-1] + dy[:, 2:]
     mag = np.abs(gx) + np.abs(gy)
-    weak = mag >= low
-    strong = mag >= high
+    weak = mag >= CANNY_LOW
+    strong = mag >= CANNY_HIGH
     if gate is not None:
         # Restrict hysteresis to the gate region BEFORE labeling: on
         # screentoned pages the ungated weak mask covers most of the
@@ -666,33 +662,24 @@ def is_text_like(region: np.ndarray) -> bool:
     )
 
 
-def detect_bubbles(
-    img: np.ndarray,
-    white_threshold: int = WHITE_THRESHOLD,
-    min_area: int = 600,
-    close_k: int = 0,
-) -> list[tuple[int, int, int, int]]:
-    """Bubble segmentation (K16/K20 analog): whiteness mask -> closing
-    (fills glyph-ink holes) -> connected components -> area/aspect/
-    whiteness heuristics -> interior bboxes.
+def detect_bubbles(img: np.ndarray) -> list[tuple[int, int, int, int]]:
+    """Bubble segmentation (K16/K20 analog): whiteness mask ->
+    connected components -> area/aspect/whiteness heuristics ->
+    interior bboxes. No hole-filling closing: glyph-ink holes inside a
+    bubble neither disconnect the white component nor change its bbox.
 
     The reference finds text boxes with Sobel+Otsu+morph-close+contours
     (modules/detection.py:12-44) on top of a DNN text mask; with the
     classical path the white bubble interior IS the high-signal region,
     so CC + heuristics on the whiteness mask is the equivalent — and
-    contour-free (bounding boxes come straight from CC stats).
-
-    ``close_k=0`` skips hole-filling: glyph-ink holes inside a bubble
-    neither disconnect the white component nor change its bbox, so the
-    closing only matters for noisy real-world scans (enable there)."""
-    white = img >= white_threshold
-    closed = close(white, close_k, close_k) if close_k > 1 else white
-    stats = label_components(closed)
+    contour-free (bounding boxes come straight from CC stats)."""
+    white = img >= WHITE_THRESHOLD
+    stats = label_components(white)
     out: list[tuple[int, int, int, int]] = []
     for ci in range(stats.n):
         x1, y1, x2, y2 = int(stats.x1[ci]), int(stats.y1[ci]), int(stats.x2[ci]), int(stats.y2[ci])
         w, h = x2 - x1, y2 - y1
-        if w * h < min_area:
+        if w * h < BUBBLE_MIN_AREA:
             continue
         aspect = w / max(h, 1)
         # Tall-narrow vertical bubbles are the manga norm (a 1-column

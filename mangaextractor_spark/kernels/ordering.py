@@ -11,8 +11,6 @@ so the rule itself can never diverge between spec and implementation).
 
 from __future__ import annotations
 
-import numpy as np
-
 Rect = tuple[int, int, int, int]  # x1, y1, x2, y2  (half-open not required; x2>x1)
 
 
@@ -54,7 +52,3 @@ def reading_order(rects: list[Rect]) -> list[int]:
             rank += 1
     return ranks
 
-
-def reading_order_np(rects: np.ndarray) -> np.ndarray:
-    """Vectorized-friendly wrapper: (n,4) int array -> (n,) ranks."""
-    return np.asarray(reading_order([tuple(r) for r in rects.tolist()]), dtype=np.int64)

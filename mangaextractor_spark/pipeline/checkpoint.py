@@ -9,7 +9,9 @@ core/processor.py:252-254,331-338, S7) plus page-identity upsert keys
 (db_util.py:59). The engine equivalent: the expensive stage runs in
 content-addressed CHUNKS (a hash bucket of media_ref or doc_id). ONE
 pass stages the input partitioned by chunk, so every chunk iteration
-is a pruned directory read and a resumed run never rescans the source.
+is a pruned directory read and a resumed run never rescans the media
+source. (``run_extraction``'s final numbering step re-explodes
+``docs`` on every call, a resumed one included.)
 Each chunk then commits (a) its output into a chunk-partitioned table
 by idempotent overwrite and (b) one lineage row. A killed run resumes
 by skipping the chunks that have a lineage row, so a chunk that died
@@ -19,7 +21,7 @@ A call's remaining chunks commit concurrently, one driver thread per
 chunk up to ``defaultParallelism``. Each OCR chunk's kernel stage gets
 a task budget: its share of the cores (at least one task), or one task
 per ``PAGES_PER_TASK`` staged pages if that is more. A Python task's
-fixed cost (about 0.2-0.4 s on 4 local cores), not its kernel work,
+fixed cost (about 0.17 s a task on a 4-vCPU host), not its kernel work,
 sets a small chunk's wall; this way small remaining chunks pay it in
 about one wave instead of one wave per chunk, and a large chunk keeps
 up to one task per split of its scan. So a chunk's lineage ``wall_ms``
@@ -35,10 +37,9 @@ groupBy over the chunks still to run, and the output sums are observed
 row with pyarrow. Manifest and lineage are written with pathlib, so
 ``out_dir`` is a driver-local path.
 
-On a cluster the tables are Iceberg (REPLACE PARTITION + snapshot
-append), and a source bucket-partitioned by doc_id IS the staging
-(``run_main_content(input_is_chunked=True)``); the sandbox uses parquet
-directories with the same layout.
+The tables are parquet directories partitioned by chunk. A source
+already bucket-partitioned by doc_id can serve as the staging itself
+(``run_main_content(input_is_chunked=True)``).
 """
 
 from __future__ import annotations
@@ -64,7 +65,7 @@ _OCR_COUNTS = ("n_pages", "n_docs", "n_bubbles", "n_empty", "n_failed_pages")
 _MC_COUNTS = ("n_docs", "n_spans", "n_text", "n_image", "n_dropped")
 # Staged pages that earn an OCR chunk a kernel task beyond its share of
 # the cores: about 0.25 s of clean-page kernel work (~4 ms a page on
-# 4 vCPUs), the order of a Python task's fixed cost (0.2-0.4 s). A chunk
+# 4 vCPUs), the order of a Python task's fixed cost (about 0.17 s). A chunk
 # with fewer pages per task would spend its tasks mostly on that cost.
 PAGES_PER_TASK = 64
 

@@ -48,7 +48,6 @@ def _load_all() -> None:
         curation,
         dedup,
         extraction_queries,
-        funnels,
         html_queries,
         image_dedup,
         main_content,

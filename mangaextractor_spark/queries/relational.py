@@ -5,11 +5,10 @@ These mirror the reference's persistence-layer query workload
 :39, top-1 :96-100, range self-join :102-107, anti-join delete
 :109-138, upsert/dedup keys :59,:454-671) and its orchestration
 semantics (sequence numbering modules/ocr.py:130-146, per-run metrics
-gui/window.py:505-508), re-expressed over the TPC-H-ish testdata:
-grouped stats and rollups, top-k, semi/anti joins, merge-upsert and
-cascading delete, set operations, an as-of join, JSON property
-extraction, and the per-user event windows (running totals, hourly
-buckets, sessions, a sliding one-hour frame).
+gui/window.py:505-508), re-expressed over the TPC-H-ish customer,
+orders and lineitem tables: grouped stats and rollups, top-k, a range
+self-join, semi/anti joins, a row_number window, merge-upsert and
+cascading delete, and set operations.
 
 Everything here is pure DataFrame/Catalyst: filters and projections
 push down to the parquet scan, small sides broadcast, aggregations get
@@ -262,114 +261,6 @@ def window_first_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "running_value_per_user",
-    """
-    SELECT event_id, user_id,
-           ROUND(SUM(value) OVER (PARTITION BY user_id
-                                  ORDER BY ts, event_id
-                                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2)
-           AS running_value
-    FROM events
-    ORDER BY user_id, event_id
-    """,
-    doc="Running-sum window over the events table (deterministic frame -> "
-    "identical sequential double adds in both engines).",
-    tags=("window",),
-)
-def running_value_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "events")
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    return (
-        e.withColumn("running_value", F.round(F.sum("value").over(w), 2))
-        .select("event_id", "user_id", "running_value")
-        .orderBy("user_id", "event_id")
-    )
-
-
-@register(
-    "event_type_stats",
-    """
-    SELECT event_type,
-           COUNT(*) AS n_events,
-           COUNT(DISTINCT user_id) AS n_users,
-           CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value,
-           MIN(ts) AS first_ts, MAX(ts) AS last_ts
-    FROM events
-    GROUP BY event_type
-    ORDER BY event_type
-    """,
-    doc="Per-group metrics rollup — the lineage/metrics aggregation shape "
-    "(reference per-run elapsed metrics, gui/window.py:247-257, O6).",
-    tags=("agg",),
-)
-def event_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("user_id").alias("n_users"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
-            F.min("ts").alias("first_ts"),
-            F.max("ts").alias("last_ts"),
-        )
-        .orderBy("event_type")
-    )
-
-
-@register(
-    "events_hourly",
-    """
-    SELECT event_type, date_trunc('hour', ts) AS hour,
-           COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-    FROM events
-    GROUP BY event_type, date_trunc('hour', ts)
-    ORDER BY event_type, hour
-    """,
-    doc="Tumbling time-bucket aggregation: one map-side-combined groupBy "
-    "on (event_type, date_trunc('hour', ts)).",
-    tags=("agg", "time"),
-)
-def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy("event_type", F.date_trunc("hour", "ts").alias("hour"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
-        )
-        .orderBy("event_type", "hour")
-    )
-
-
-@register(
-    "top_users_by_value",
-    """
-    SELECT user_id, CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-    FROM events
-    GROUP BY user_id
-    ORDER BY total_value DESC, user_id
-    LIMIT 10
-    """,
-    doc="Top-k after aggregation with tie-break.",
-    tags=("agg", "topk"),
-)
-def top_users_by_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy("user_id")
-        .agg(F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"))
-        .orderBy(F.desc("total_value"), "user_id")
-        .limit(10)
-    )
-
-
-@register(
     "merge_upsert_orders",
     """
     WITH base AS (
@@ -488,138 +379,6 @@ def cascade_delete_remaining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "event_sessions",
-    """
-    WITH gaps AS (
-      SELECT user_id, event_id, epoch_us(ts) AS us,
-             CASE WHEN epoch_us(ts) - LAG(epoch_us(ts)) OVER w > 1800000000
-                  OR LAG(epoch_us(ts)) OVER w IS NULL
-                  THEN 1 ELSE 0 END AS is_start
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    sess AS (
-      SELECT user_id, us,
-             SUM(is_start) OVER (
-               PARTITION BY user_id ORDER BY us, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-             ) AS session_id
-      FROM gaps
-    ),
-    per AS (
-      SELECT user_id, session_id, COUNT(*) AS n_events,
-             (MAX(us) - MIN(us)) // 1000000 AS duration_s
-      FROM sess GROUP BY user_id, session_id
-    )
-    SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_sessions,
-           CAST(MAX(n_events) AS BIGINT) AS max_session_events,
-           CAST(MAX(duration_s) AS BIGINT) AS max_session_s
-    FROM per GROUP BY user_id ORDER BY user_id
-    """,
-    doc="Gap-based sessionization (30-min inactivity): lag -> session "
-    "boundary flag -> running-sum session id -> per-session rollup -> "
-    "per-user summary. Two windows and two aggregations over ONE "
-    "shuffle: every window/groupBy is keyed by user_id, so Catalyst "
-    "reuses the same hash partitioning end-to-end — the pattern that "
-    "matters at 10^12 events.",
-    tags=("window", "sessionization"),
-)
-def event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "events").withColumn(
-        "us", F.unix_micros(F.col("ts").cast("timestamp"))
-    )
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("us").over(w)
-    is_start = F.when(prev.isNull() | (F.col("us") - prev > 1800000000), 1).otherwise(0)
-    wrun = W.partitionBy("user_id").orderBy("us", "event_id").rowsBetween(
-        W.unboundedPreceding, 0
-    )
-    sess = e.withColumn("is_start", is_start).withColumn(
-        "session_id", F.sum("is_start").over(wrun)
-    )
-    per = sess.groupBy("user_id", "session_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        ((F.max("us") - F.min("us")) / F.lit(1000000)).cast("long").alias("duration_s"),
-    )
-    return (
-        per.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_sessions"),
-            F.max("n_events").alias("max_session_events"),
-            F.max("duration_s").alias("max_session_s"),
-        )
-        .orderBy("user_id")
-    )
-
-
-GAP = "30 minutes"
-
-
-def session_stats(events: DataFrame) -> DataFrame:
-    """Session aggregation: one row per (user, session) with the
-    session bounds Spark assigns (start = first event, end = last
-    event + GAP). The value sum rides DECIMAL inside the aggregation
-    (exact, order-independent) and converts to DOUBLE once."""
-    return (
-        events.groupBy("user_id", F.session_window(F.col("ts"), GAP).alias("sw"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("value_sum"),
-        )
-        .select(
-            "user_id",
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "n_events",
-            "value_sum",
-        )
-    )
-
-
-@register(
-    "session_window_stats",
-    """
-    WITH gaps AS (
-      SELECT user_id, ts, value, event_id, epoch_us(ts) AS us,
-             CASE WHEN LAG(epoch_us(ts)) OVER w IS NULL
-                  OR epoch_us(ts) - LAG(epoch_us(ts)) OVER w > 1800000000
-                  THEN 1 ELSE 0 END AS is_start
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    sess AS (
-      SELECT user_id, ts, value,
-             SUM(is_start) OVER (
-               PARTITION BY user_id ORDER BY us, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-             ) AS sid
-      FROM gaps
-    )
-    SELECT user_id,
-           MIN(ts) AS session_start,
-           MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS value_sum
-    FROM sess GROUP BY user_id, sid
-    ORDER BY user_id, session_start
-    """,
-    doc="Engine-native session windows: Spark's built-in session_window "
-    "(per-event windows [ts, ts+30min] merged INCLUSIVELY by Catalyst's "
-    "session aggregation — an event exactly at a session's end extends "
-    "it, pinned by tests' exact-gap fixture) — one shuffle on user_id, NO per-user ORDER "
-    "BY window. The oracle restates the merge rule relationally (new "
-    "session iff the gap EXCEEDS 30 min — "
-    "the same > rule as event_sessions, so the two constructions are "
-    "interchangeable) and must agree on bounds (start = first event, end = last "
-    "event + gap), counts, and the DECIMAL-exact value sum.",
-    tags=("window", "sessionization"),
-)
-def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "events")
-    return session_stats(e).orderBy("user_id", "session_start")
-
-
-@register(
     "pricing_rollup",
     """
     SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
@@ -651,37 +410,6 @@ def pricing_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_qty",
         )
         .orderBy("returnflag", "linestatus")
-    )
-
-
-@register(
-    "events_json_props",
-    """
-    SELECT CAST(json_extract(props, '$.k') AS BIGINT) % 10 AS k_bucket,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(MIN(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS min_k,
-           CAST(MAX(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS max_k
-    FROM events
-    GROUP BY 1 ORDER BY k_bucket
-    """,
-    doc="Semi-structured column access: JSON path extraction from the "
-    "events.props string, aggregated by bucket. Spark side uses "
-    "get_json_object (codegen'd Jackson path, no UDF) — at 100 TB the "
-    "extraction cost is scan-fused, no extra pass.",
-    tags=("json", "agg"),
-)
-def events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("long")
-    return (
-        e.select((k % 10).alias("k_bucket"), k.alias("k"))
-        .groupBy("k_bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("k").alias("min_k"),
-            F.max("k").alias("max_k"),
-        )
-        .orderBy("k_bucket")
     )
 
 
@@ -728,114 +456,3 @@ def segment_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         cnt = df.agg(F.count(F.lit(1)).alias("n")).select(F.lit(op).alias("op"), "n")
         out = cnt if out is None else out.unionByName(cnt)
     return out.orderBy("op")
-
-
-@register(
-    "asof_latest_order",
-    """
-    WITH j AS (
-      SELECT e.event_id, e.user_id, e.ts, o.o_orderkey, o.o_orderdate,
-             ROW_NUMBER() OVER (
-               PARTITION BY e.event_id
-               ORDER BY o.o_orderdate DESC, o.o_orderkey DESC
-             ) AS rn
-      FROM events e
-      LEFT JOIN orders o
-        ON o.o_custkey = e.user_id AND o.o_orderdate <= e.ts
-    )
-    SELECT event_id, user_id, ts,
-           o_orderkey AS last_orderkey, o_orderdate AS last_orderdate
-    FROM j WHERE rn = 1 ORDER BY event_id
-    """,
-    doc="AS-OF JOIN: for every event, the customer's most recent order "
-    "at or before the event time (tie-break max orderkey); events with "
-    "no prior order keep NULLs. Spark has no asof operator, so this is "
-    "the scalable composition: UNION both tables into one (key, time) "
-    "stream, ONE shuffle+sort per key, and a running last_value("
-    "ignorenulls) window carries the latest order forward onto each "
-    "event row — O(n log n) per key partition, no row-level "
-    "inequality join. (The oracle states the same semantics as a "
-    "LEFT JOIN + per-event window, which would be quadratic per hot "
-    "key at scale — the union-merge IS the scale rewrite.)",
-    tags=("join", "window"),
-)
-def asof_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderkey", "o_orderdate"
-    )
-    orders_side = o.select(
-        F.col("o_custkey").alias("user_id"),
-        F.col("o_orderdate").alias("t"),
-        F.lit(1).alias("is_order"),
-        "o_orderkey",
-        "o_orderdate",
-        F.lit(None).cast("long").alias("event_id"),
-        F.lit(None).cast("timestamp").alias("ts"),
-    )
-    events_side = e.select(
-        "user_id",
-        F.col("ts").alias("t"),
-        F.lit(0).alias("is_order"),
-        F.lit(None).cast("long").alias("o_orderkey"),
-        F.lit(None).cast("timestamp").alias("o_orderdate"),
-        "event_id",
-        "ts",
-    )
-    merged = orders_side.unionByName(events_side)
-    # Orders sort before events at the same instant (<= semantics), and
-    # among same-time orders the max orderkey comes last, so last_value
-    # picks it — the deterministic tie-break the oracle mirrors.
-    w = (
-        W.partitionBy("user_id")
-        .orderBy(F.col("t"), F.desc("is_order"), F.col("o_orderkey"))
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    carried = merged.select(
-        "event_id", "user_id", "ts", "is_order",
-        F.last("o_orderkey", ignorenulls=True).over(w).alias("last_orderkey"),
-        F.last("o_orderdate", ignorenulls=True).over(w).alias("last_orderdate"),
-    )
-    return carried.filter(F.col("is_order") == 0).select(
-        "event_id", "user_id", "ts", "last_orderkey", "last_orderdate"
-    )
-
-
-@register(
-    "events_sliding_1h",
-    """
-    SELECT event_id, user_id,
-           COUNT(*) OVER w AS n_1h,
-           CAST(SUM(CAST(value AS DECIMAL(18,4))) OVER w AS DOUBLE) AS value_1h
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts
-                 RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
-    ORDER BY user_id, event_id
-    """,
-    doc="Sliding time-window per entity: for every event, count + sum of "
-    "value over the user's PRECEDING HOUR — a RANGE frame over event "
-    "time (the rows-frame twin is running_value_per_user; a RANGE frame "
-    "includes all timestamp peers and is what 'last N minutes' features "
-    "actually mean). Spark orders by timezone-free epoch micros "
-    "(timestampdiff from the NTZ epoch — ts is TIMESTAMP_NTZ, so no "
-    "session-timezone dependency) with a numeric rangeBetween of "
-    "-3_600_000_000, exactly DuckDB's INTERVAL 1 HOUR "
-    "on microsecond timestamps. The sum runs in DECIMAL inside the "
-    "frame (sliding-window sums may add AND subtract as the frame "
-    "slides — in doubles that drifts, in decimal it is exact), cast to "
-    "double once at the end. Scale: partitioned by user_id — per-entity "
-    "series are the one window shape that cannot be pre-aggregated "
-    "away; state is bounded by one entity's events per task, and a "
-    "pathologically hot entity moves to a tumbling pre-agg.",
-    tags=("window", "time"),
-)
-def events_sliding_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "events")
-    micros = F.expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)")
-    w = W.partitionBy("user_id").orderBy(micros).rangeBetween(-3_600_000_000, 0)
-    return e.select(
-        "event_id",
-        "user_id",
-        F.count(F.lit(1)).over(w).alias("n_1h"),
-        F.sum(F.col("value").cast(DEC)).over(w).cast("double").alias("value_1h"),
-    ).orderBy("user_id", "event_id")

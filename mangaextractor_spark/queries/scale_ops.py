@@ -5,8 +5,7 @@ sketch that replaces the base-corpus join in cross-snapshot dedup),
 Z-order multi-dimensional layout + the file-skipping stats that
 measure it (the Delta/Iceberg OPTIMIZE ZORDER data plane), the
 join-skew pre-flight diagnostic, BPE tokenizer-training pair counts,
-feature-hashing document vectors, and the bucketed interval self-join
-that turns a time-window theta join into an equi-join.
+and feature-hashing document vectors.
 
 All of them follow the repo's determinism rules (queries/__init__.py):
 every corpus-sized frequency is a map-side-combined groupBy joined
@@ -756,80 +755,6 @@ def bloom_register_row(base_hashes: DataFrame) -> DataFrame:
     )
     return words.agg(
         F.map_from_entries(F.collect_list(F.struct("word", "bits"))).alias("bloom")
-    )
-
-
-# -- bucketed interval self-join ------------------------------------------
-
-OVERLAP_US = 300 * 1_000_000  # 5-minute pairing window, in microseconds
-
-_OVERLAP_SQL = f"""
-WITH e AS (
-  SELECT user_id, event_id, epoch_us(ts) AS us FROM events
-)
-SELECT a.user_id, a.event_id AS a_id, b.event_id AS b_id,
-       b.us - a.us AS gap_us
-FROM e a JOIN e b
-  ON a.user_id = b.user_id AND a.event_id < b.event_id
- AND abs(a.us - b.us) <= {OVERLAP_US}
-ORDER BY a.user_id, a_id, b_id
-"""
-
-
-@register(
-    "event_overlap_pairs",
-    _OVERLAP_SQL,
-    doc="Bucketed interval self-join: pairs of events by the same user "
-    "within a 5-minute window — the shape of co-occurrence joins, "
-    "sessional theta joins and as-of candidate generation. The oracle "
-    "states the naive theta join (|t_a - t_b| <= W); the Spark side "
-    "runs the SCALE form: each event lands in time bucket t DIV W, the "
-    "LEFT side explodes to its three adjacent buckets and the join is "
-    "a pure EQUI-join on (user_id, bucket) followed by the exact "
-    "|gap| <= W filter. Because a qualifying pair's buckets differ by "
-    "at most 1, each pair matches in EXACTLY one bucket — no dedup "
-    "pass. This turns the quadratic per-user theta join (a hot user = "
-    "one straggler task, unsplittable) into a shuffle AQE can "
-    "skew-split, with candidate fan-out bounded by 3x the events that "
-    "share a bucket; results are identical by construction and the "
-    "plan is asserted free of BroadcastNestedLoopJoin/CartesianProduct.",
-    tags=("relational", "interval", "scale"),
-)
-def event_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    us = F.unix_micros(F.col("ts").cast("timestamp"))  # NTZ + UTC session = epoch_us
-    e = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        us.alias("us"),
-        F.expr(f"unix_micros(CAST(ts AS TIMESTAMP)) DIV {OVERLAP_US}").alias("bucket"),
-    )
-    left = e.select(
-        F.col("user_id"),
-        F.col("event_id").alias("a_id"),
-        F.col("us").alias("a_us"),
-        F.explode(
-            F.array(F.col("bucket") - 1, F.col("bucket"), F.col("bucket") + 1)
-        ).alias("bucket"),
-    )
-    right = e.select(
-        F.col("user_id"),
-        F.col("event_id").alias("b_id"),
-        F.col("us").alias("b_us"),
-        F.col("bucket"),
-    )
-    return (
-        left.join(right, ["user_id", "bucket"])
-        .filter(
-            (F.col("a_id") < F.col("b_id"))
-            & (F.abs(F.col("a_us") - F.col("b_us")) <= OVERLAP_US)
-        )
-        .select(
-            "user_id",
-            "a_id",
-            "b_id",
-            (F.col("b_us") - F.col("a_us")).alias("gap_us"),
-        )
-        .orderBy("user_id", "a_id", "b_id")
     )
 
 

@@ -37,7 +37,6 @@ def driver_memory(physical_bytes: int) -> str:
 def get_spark(
     app_name: str = "mangaextractor_spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
@@ -51,7 +50,7 @@ def get_spark(
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or n))
+        .config("spark.sql.shuffle.partitions", str(n))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -87,7 +86,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def spread(df, parallelism: int | None = None):
+def spread(df):
     """Round-robin repartition a compute-bound input across the cluster.
 
     A small or single-row-group file scan pins every downstream map-side
@@ -98,8 +97,7 @@ def spread(df, parallelism: int | None = None):
     compute, so this shuffle is noise while the parallelism it buys is
     the whole game (cf. the salted repartition in pipeline/extract).
     """
-    sc = df.sparkSession.sparkContext
-    n = parallelism or sc.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     # Already well-split (a big table's scan): repartitioning would be a
     # full extra shuffle for nothing — the guard is what lets the same
     # query code run on the 100 TB table unchanged.

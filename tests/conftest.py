@@ -15,7 +15,7 @@ TESTDATA = "/root/testdata"
 def spark():
     from mangaextractor_spark.session import get_spark
 
-    s = get_spark(app_name="tests", cores=4, shuffle_partitions=4)
+    s = get_spark(app_name="tests", cores=4)
     s.sparkContext.setLogLevel("ERROR")
     yield s
 

@@ -1,6 +1,5 @@
 """Semantics + plan-shape tests for the wave-5 curation/analytics
-additions: per-source frequency cap, event-rate anomaly flags, and
-per-language top tokens.
+additions: per-source frequency cap and per-language top tokens.
 
 Each value test recomputes the operator's DEFINITION independently in
 pandas/numpy (not via the SQL oracle — test_queries_oracle already
@@ -64,34 +63,6 @@ def test_per_source_cap_window_rides_the_pretopk(spark, sf_medium):
     assert "Window" in plan
     w_pos = plan.index("Window")
     assert "MapInPandas" in plan[w_pos:], "rank window input is not pre-pruned"
-
-
-def test_event_rate_anomaly_matches_float_zscore(spark, sf_small):
-    from mangaextractor_spark.queries.funnels import ANOMALY_Z, event_rate_anomaly
-
-    got = event_rate_anomaly(spark, sf_small).toPandas()
-
-    ev = pq.read_table(f"{sf_small}/events.parquet").to_pandas()
-    ev["hour"] = ev["ts"].dt.floor("h")
-    b = ev.groupby(["event_type", "hour"]).size().rename("cnt").reset_index()
-    stats = b.groupby("event_type")["cnt"].agg(["count", "sum", "mean"])
-    # population variance via the same moments the operator uses
-    sq = b.assign(c2=b["cnt"] * b["cnt"]).groupby("event_type")["c2"].sum()
-    for _, row in got.iterrows():
-        st = stats.loc[row["event_type"]]
-        n, s = int(st["count"]), int(st["sum"])
-        q = int(sq.loc[row["event_type"]])
-        var = q / n - (s / n) ** 2
-        dev = row["cnt"] - s / n
-        want_flag = dev * dev > (ANOMALY_Z**2) * var
-        # exact-integer form and float form agree away from exact ties
-        lhs = (n * int(row["cnt"]) - s) ** 2
-        rhs = (ANOMALY_Z**2) * (n * q - s * s)
-        if lhs != rhs:  # tie => engine-defined; the oracle pins it
-            assert bool(row["is_anomaly"]) == want_flag, row.to_dict()
-        assert int(row["mean_e6"]) == (1_000_000 * s) // n
-    # bucket coverage: one output row per observed (type, hour) bucket
-    assert len(got) == len(b)
 
 
 def test_lang_top_tokens_matches_pandas(spark, sf_small):

@@ -24,7 +24,6 @@ TABLES = [
     "part",
     "orders",
     "lineitem",
-    "events",
     "documents",
 ]
 

@@ -325,43 +325,6 @@ def test_feature_hash_no_window(spark, sf_medium):
     assert "Window" not in plan
 
 
-def test_event_overlap_pairs_matches_definition(spark, sf_small):
-    from mangaextractor_spark.queries.scale_ops import OVERLAP_US, event_overlap_pairs
-
-    got = {(r["user_id"], r["a_id"], r["b_id"]): r["gap_us"]
-           for r in event_overlap_pairs(spark, sf_small).collect()}
-
-    ev = pq.read_table(f"{sf_small}/events.parquet").to_pandas()
-    # pandas loads datetime64[ns]; convert to epoch microseconds exactly
-    ev["us"] = ev["ts"].values.astype("datetime64[us]").astype("int64")
-    expect = {}
-    by_user = ev.groupby("user_id")
-    for uid, grp in by_user:
-        rows = list(zip(grp["event_id"], grp["us"]))
-        for i, (ida, ta) in enumerate(rows):
-            for idb, tb in rows:
-                if ida < idb and abs(ta - tb) <= OVERLAP_US:
-                    expect[(uid, ida, idb)] = tb - ta
-    assert got == expect and len(got) > 0
-
-
-def test_event_overlap_pairs_is_equi_join(spark, sf_medium):
-    """The scale point: the plan must contain NO nested-loop/cartesian
-    join — the theta condition rides a (user_id, bucket) equi-join that
-    AQE can skew-split."""
-    from mangaextractor_spark.queries.scale_ops import event_overlap_pairs
-
-    plan = (
-        event_overlap_pairs(spark, sf_medium)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert "Window" not in plan
-
-
 def test_range_partition_stats_matches_definition(spark, sf_small):
     from mangaextractor_spark.queries.scale_ops import N_RANGES, range_partition_stats
 

@@ -1,10 +1,10 @@
-"""Session defaults that depend on the host."""
+"""Session defaults that depend on the host, and the `spread` repartition guard."""
 
 from __future__ import annotations
 
 import pytest
 
-from mangaextractor_spark.session import driver_memory
+from mangaextractor_spark.session import driver_memory, spread
 
 GB = 2**30
 
@@ -23,3 +23,17 @@ GB = 2**30
 )
 def test_driver_memory_is_a_sixth_of_ram_clamped(physical, heap):
     assert driver_memory(physical) == heap
+
+
+def test_spread_splits_a_single_partition_frame(spark):
+    df = spark.range(100, numPartitions=1)
+    out = spread(df)
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+def test_spread_leaves_a_well_split_frame_alone(spark):
+    n = spark.sparkContext.defaultParallelism
+    df = spark.range(0, 100, 1, numPartitions=n)
+    out = spread(df)
+    assert out is df
+    assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
